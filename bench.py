@@ -256,12 +256,7 @@ def streaming_dedup_bench(spark, sf_dir: str) -> dict:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     n_docs = docs.count()
 
-    def one_run(
-        n_files: int,
-        fpt: int,
-        compact_every: int | None,
-        store_bloom: bool = False,
-    ) -> dict:
+    def one_run(n_files: int, fpt: int, compact_every: int | None) -> dict:
         tmp = tempfile.mkdtemp(prefix="sdedup_bench_")
         try:
             topic = os.path.join(tmp, "docs")
@@ -271,7 +266,6 @@ def streaming_dedup_bench(spark, sf_dir: str) -> dict:
                 store_dir=os.path.join(tmp, "store"),
                 checkpoint_dir=os.path.join(tmp, "ckpt"),
                 compact_every=compact_every,
-                store_bloom=store_bloom,
             )
             batch_secs: list[float] = []
             inner = ingest.process_batch
@@ -306,8 +300,7 @@ def streaming_dedup_bench(spark, sf_dir: str) -> dict:
                 "first8_batch_sec": round(sum(head) / max(len(head), 1), 4),
                 "last8_batch_sec": round(sum(tail) / max(len(tail), 1), 4),
                 # round-11 census sub splits: sig / store-probe / merge
-                # slices of the dedup stage, summed over the run — the
-                # number the store_bloom A/B moves (or honestly doesn't)
+                # slices of the dedup stage, summed over the run
                 "sub": ingest.gate_census().get("dedup", {}).get("sub"),
             }
         finally:
@@ -325,20 +318,6 @@ def streaming_dedup_bench(spark, sf_dir: str) -> dict:
     )
     no_compact = compaction_ab["off"]
     sweep.append(no_compact)
-    # round-11 store-bloom A/B (census-guided: the probe is ~56% of
-    # the dedup stage): same many-small-batches regime, bloom-over-
-    # batch-band-keys prefilter on the store side OFF vs ON; each arm
-    # carries its sig/probe/merge sub splits so the row shows WHERE
-    # the bloom moves cost.  At bench-scale stores the extra build job
-    # can wash out the shuffle savings — the row records whichever way
-    # it lands; the knob exists for stores that dwarf the batch.
-    store_bloom_ab = interleaved_best(
-        {
-            "off": lambda: one_run(32, 1, None),
-            "on": lambda: one_run(32, 1, None, store_bloom=True),
-        },
-        rate=lambda r: r["docs_per_sec"],
-    )
     # headline comes from the compaction-OFF sweep only, and carries
     # compact_every explicitly — a compaction-assisted number must
     # never masquerade as the plain ingest configuration
@@ -361,7 +340,6 @@ def streaming_dedup_bench(spark, sf_dir: str) -> dict:
         "n_docs": n_docs,
         "sweep": sweep,
         "compaction_ab": compaction_ab,
-        "store_bloom_ab": store_bloom_ab,
     }
 
 
@@ -559,7 +537,7 @@ def ingest_compaction_ab_bench(spark, sf_dir: str) -> dict:
 
 def learned_ops_bench(spark, sf_dir: str) -> dict:
     """Round-6 learned operators, measured: BPE merge training (16
-    rounds over the documents table — per-round cost is one
+    merges over the documents table — per-round cost is one
     vocab-bounded pair aggregate + a map-only fold, so merges/sec is
     the number to watch as the corpus grows) and the quality
     classifier (train on the source weak-label split, then the
@@ -590,23 +568,16 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
 
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()
-    t0 = time.perf_counter()
-    merges = bpe_train(docs.select("text"), n_merges=16, checkpoint_every=8)
-    t_bpe = time.perf_counter() - t0
-    # round 7: batched merge rounds — same merge table (pinned by
-    # pytest), fewer driver round-trips (the vocab-size scale cap)
+    # each round applies the whole sequential-identical merge batch
+    # (pinned by pytest), so rounds < merges — the driver round-trips
+    # that cap vocab size
     stats: dict = {}
     t0 = time.perf_counter()
-    merges_b = bpe_train(
-        docs.select("text"),
-        n_merges=16,
-        checkpoint_every=8,
-        merges_per_round=8,
-        stats=stats,
+    merges = bpe_train(
+        docs.select("text"), n_merges=16, checkpoint_every=8, stats=stats
     )
-    t_bpe_batched = time.perf_counter() - t0
-    bpe_rounds_batched = stats.get("rounds", -1)
-    bpe_batched_identical = merges_b == merges
+    t_bpe = time.perf_counter() - t0
+    bpe_rounds = stats.get("rounds", -1)
 
     labeled = quality_training_frame(
         docs.where(F.col("source") == "src0"),
@@ -621,168 +592,27 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
         )
     )
 
-    # KN bigram LM (the perplexity-filter tier): fit on half the
+    # KN LM (the perplexity-filter tier), order 3: fit on half the
     # corpus, score the other half — the deployed fit-once/score-many
     # split, like the classifier's
-    from consume_kafka_avro_data_spark.operators.lm import BigramKN
+    from consume_kafka_avro_data_spark.operators.lm import NgramKN
 
     train = docs.where(F.col("doc_id") % 2 == 0)
     held = docs.where(F.col("doc_id") % 2 == 1).select("doc_id", "text")
     n_held = held.count()
     t0 = time.perf_counter()
-    lm = BigramKN.fit(train)
-    t_kn_fit = time.perf_counter() - t0
-    try:
-        t_kn, kn_samples = timed_best(lambda: noop_write(lm.score(held)))
-    finally:
-        lm.unpersist()
-    # round 7: the order-3 generalization (CCNet's published filter is
-    # an n-gram KenLM) — same fit-once/score-many split
-    from consume_kafka_avro_data_spark.operators.lm import NgramKN
-
-    t0 = time.perf_counter()
     lm3 = NgramKN.fit(train, order=3)
     t_kn3_fit = time.perf_counter() - t0
-    lm_gate_ab: dict = {}
-    lm_kernel_ab: dict = {}
     try:
         t_kn3, kn3_samples = timed_best(
             lambda: noop_write(lm3.score(held))
         )
-        # round 8: the INGEST LM gate's broadcast A/B — a PRUNED
-        # deployed-shape model (min_count=2; the configuration the
-        # auto-broadcast default exists for — an unpruned sf-fit
-        # model's tables are exactly the case the docstring says to
-        # broadcast=False on) riding StreamingDedupIngest over a
-        # 4-batch stream of the held split, threshold set above every
-        # score so the arms do identical routing work; the only
-        # difference is whether each micro-batch's 2n−1 model joins
-        # broadcast (map-only gate) or sort-merge (per-batch shuffles)
-        from consume_kafka_avro_data_spark.streaming.dedup import (
-            StreamingDedupIngest,
-        )
-
-        lm3g = NgramKN.fit(train, order=3, min_count=2)
-
-        def lm_gate_run(broadcast) -> dict:
-            tmp = tempfile.mkdtemp(prefix="lmgate_bench_")
-            try:
-                topic = os.path.join(tmp, "docs")
-                held.repartition(4).write.parquet(topic)
-                ingest = StreamingDedupIngest(
-                    spark,
-                    store_dir=os.path.join(tmp, "store"),
-                    checkpoint_dir=os.path.join(tmp, "ckpt"),
-                    lm_model=lm3g,
-                    lm_threshold=1e9,
-                    lm_broadcast=broadcast,
-                )
-                stream = (
-                    spark.readStream.schema(held.schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(topic)
-                )
-                t0 = time.perf_counter()
-                m = ingest.run_to_completion(stream)
-                dt = time.perf_counter() - t0
-                return {
-                    "docs": m.docs,
-                    "batches": m.batches,
-                    "sec": round(dt, 4),
-                    "docs_per_sec": round(m.docs / dt, 1),
-                }
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-
-        try:
-            # best-of-2 per arm, arms interleaved, samples on record
-            # (interleaved_best); round 9 added the dict arm (the
-            # broadcast-DICT Arrow scorer — model collected once,
-            # zero model joins per micro-batch); round 10 splits it
-            # into the two payload layouts: "dict" = flat kernel
-            # (int-interned keys + per-batch gram memo, the deployed
-            # default) vs "dict_tuple" = the round-9 string-tuple
-            # kernel (raw-kernel micro-bench: ~57k vs ~70k docs/s at
-            # 50k-doc batches; at THIS bench's 625-doc micro-batches
-            # per-batch fixed costs dominate both)
-            lm_gate_ab = interleaved_best(
-                {
-                    "off": lambda: lm_gate_run(False),
-                    "on": lambda: lm_gate_run(True),
-                    "dict": lambda: lm_gate_run("dict"),
-                    "dict_tuple": lambda: lm_gate_run("dict-tuple"),
-                },
-                rate=lambda r: r["docs_per_sec"],
-            )
-            # round 10: the RAW kernel A/B the gate A/B can't see —
-            # at the stream's 625-doc micro-batches per-batch fixed
-            # costs dominate, so the two dict payload layouts are
-            # measured here on one big cached batch where the Python
-            # loop is the cost: flat (int-interned + gram memo) vs
-            # the round-9 string-tuple kernel, same model, same docs
-            big = held.select("doc_id", "text")
-            for i in range(19):
-                big = big.union(
-                    held.select(
-                        (F.col("doc_id") + (i + 1) * 10_000_000).alias(
-                            "doc_id"
-                        ),
-                        "text",
-                    )
-                )
-            big = big.repartition(32).cache()
-            n_big = big.count()
-            tup_payload = lm3g.local_tables()
-            from consume_kafka_avro_data_spark.operators.lm import (
-                flatten_local_tables,
-            )
-
-            flat_payload = flatten_local_tables(tup_payload)
-
-            def kernel_run(payload) -> dict:
-                bc = spark.sparkContext.broadcast(payload)
-                try:
-                    t0 = time.perf_counter()
-                    noop_write(lm3g.score_broadcast(big, _local=bc))
-                    dt = time.perf_counter() - t0
-                    return {
-                        "docs": n_big,
-                        "sec": round(dt, 4),
-                        "docs_per_sec": round(n_big / dt, 1),
-                    }
-                finally:
-                    bc.unpersist()
-
-            # warm the Python workers OUTSIDE the timers: the first
-            # pandas-UDF pass of the session pays worker spawn for all
-            # 32 executor threads, and without this the arm that runs
-            # FIRST eats it (the r10 seal's flat sample read 10.7k vs
-            # its warm 41k docs/s purely from run order)
-            kernel_run(tup_payload)
-            # round 11: N=5 interleaved repetitions (was 2) — the r10
-            # seals disagreed on the winner in both A/B rows at 2
-            # samples per arm, so the committed artifact now carries
-            # enough samples to settle flat-vs-tuple per seal instead
-            # of re-litigating it from single-run noise; each run is
-            # ~1-2 s at this batch size, so the wider protocol costs
-            # seconds
-            lm_kernel_ab = interleaved_best(
-                {
-                    "flat": lambda: kernel_run(flat_payload),
-                    "tuple": lambda: kernel_run(tup_payload),
-                },
-                rate=lambda r: r["docs_per_sec"],
-                runs=5,
-            )
-            big.unpersist()
-        finally:
-            lm3g.unpersist()
     finally:
         lm3.unpersist()
     # round 8: CCNet's DEPLOYED order — kn5 at bench scale, with the
     # min_count pruning A/B that decides broadcastability: the pruned
     # arm is the deployed shape (fit once on trusted text, tables small
-    # enough to broadcast, then score map-only via broadcast_model),
+    # enough to broadcast, then score map-only via score_broadcast),
     # the unpruned arm records what pruning saves in model rows
     # (model_rows() is the same count the local-dict ceiling enforces)
     t0 = time.perf_counter()
@@ -791,7 +621,7 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
     kn5_rows_pruned = lm5.model_rows()
     try:
         t_kn5, kn5_samples = timed_best(
-            lambda: noop_write(lm5.score(held, broadcast_model=True))
+            lambda: noop_write(lm5.score_broadcast(held))
         )
     finally:
         lm5.unpersist()
@@ -847,24 +677,20 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
             dsir_log_weights(dsir_model, docs.select("doc_id", "text"))
         )
     )
-    # round 8: the all-JVM tier — xxhash64 bucket family fit AND scored
+    # round 8: the all-JVM tier — an xxhash64 model is fit AND scored
     # as pure codegen'd expressions (no Python workers, no Arrow, no
-    # hex-string round-trips; the md5-compatible JVM path exists too
-    # but conv-parses hex per gram — measured slower than Arrow).  The
-    # one-row broadcast ratio frame carries the 80 KB model.
+    # hex-string round-trips).  The one-row broadcast ratio frame
+    # carries the 80 KB model.
     t0 = time.perf_counter()
     dsir_xxh = dsir_fit(
         docs.where(F.col("source") == "src0"),
         docs.where(F.col("source") != "src0"),
-        engine="jvm",
         hash_fn="xxhash64",
     )
     t_dsir_jvm_fit = time.perf_counter() - t0
     t_dsir_jvm, dsir_jvm_samples = timed_best(
         lambda: noop_write(
-            dsir_log_weights(
-                dsir_xxh, docs.select("doc_id", "text"), engine="jvm"
-            )
+            dsir_log_weights(dsir_xxh, docs.select("doc_id", "text"))
         )
     )
     # the tiers' cost STRUCTURE differs: the JVM weigher pays a fixed
@@ -886,12 +712,9 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
     # round so a drifting box can't flip the crossover claim
     tier_samples: dict = {"pandas": [], "jvm": []}
     for _ in range(2):
-        for label, m, eng in (
-            ("pandas", dsir_model, "pandas"),
-            ("jvm", dsir_xxh, "jvm"),
-        ):
+        for label, m in (("pandas", dsir_model), ("jvm", dsir_xxh)):
             t0 = time.perf_counter()
-            dsir_log_weights(m, big, engine=eng).write.format("noop").mode(
+            dsir_log_weights(m, big).write.format("noop").mode(
                 "overwrite"
             ).save()
             tier_samples[label].append(time.perf_counter() - t0)
@@ -925,12 +748,11 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
     # routing), printing gate_census() so a deployment sizing its
     # executors reads which stage is the wall-clock floor from the
     # bench instead of instrumenting production
-    from consume_kafka_avro_data_spark.operators.lm import NgramKN as _KN
     from consume_kafka_avro_data_spark.streaming.dedup import (
-        StreamingDedupIngest as _SDI,
+        StreamingDedupIngest,
     )
 
-    lm_census = _KN.fit(train, order=2, min_count=2)
+    lm_census = NgramKN.fit(train, order=2, min_count=2)
     six_gate_census: dict = {}
     try:
         tmp = tempfile.mkdtemp(prefix="gate_census_bench_")
@@ -946,7 +768,7 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
                 "doc_id", F.concat(F.col("text"), F.lit(".")).alias("text")
             )
             held_c4.repartition(4).write.parquet(topic)
-            ingest = _SDI(
+            ingest = StreamingDedupIngest(
                 spark,
                 store_dir=os.path.join(tmp, "store"),
                 checkpoint_dir=os.path.join(tmp, "ckpt"),
@@ -986,9 +808,7 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
         "six_gate_census": six_gate_census,
         "bpe_merges": len(merges),
         "bpe_train_sec": round(t_bpe, 4),
-        "bpe_train_batched_sec": round(t_bpe_batched, 4),
-        "bpe_batched_rounds": bpe_rounds_batched,
-        "bpe_batched_identical": bpe_batched_identical,
+        "bpe_rounds": bpe_rounds,
         "kn3_fit_sec": round(t_kn3_fit, 4),
         "kn3_score_sec": round(t_kn3, 4),
         "kn3_score_docs_per_sec": round(n_held / t_kn3, 1),
@@ -1000,16 +820,10 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
         "kn5_score_sec": round(t_kn5, 4),
         "kn5_docs_per_sec": round(n_held / t_kn5, 1),
         "kn5_score_samples": kn5_samples,
-        "lm_gate_broadcast_ab": lm_gate_ab,
-        "lm_kernel_ab": lm_kernel_ab,
         "quality_train_sec": round(t_train, 4),
         "quality_score_sec": round(t_score, 4),
         "quality_score_docs_per_sec": round(n_docs / t_score, 1),
         "quality_score_samples": quality_samples,
-        "kn_fit_sec": round(t_kn_fit, 4),
-        "kn_score_sec": round(t_kn, 4),
-        "kn_score_docs_per_sec": round(n_held / t_kn, 1),
-        "kn_score_samples": kn_samples,
         "unigram_vocab": len(uni_model),
         "unigram_e_steps": uni_stats.get("e_steps", -1),
         "unigram_train_sec": round(t_uni_train, 4),
@@ -1965,11 +1779,6 @@ def main() -> None:
                 bloom_ss["probe_sec"],
             ],
             "bpe_train16_sec": learned["bpe_train_sec"],
-            # [sequential, batched merges_per_round=8] — same table
-            "bpe_batched_sec": [
-                learned["bpe_train_sec"],
-                learned["bpe_train_batched_sec"],
-            ],
             "quality_docs_per_sec": learned["quality_score_docs_per_sec"],
             "kn3_docs_per_sec": learned["kn3_score_docs_per_sec"],
             "kn5_docs_per_sec": learned["kn5_docs_per_sec"],
@@ -1977,21 +1786,6 @@ def main() -> None:
             "dsir_docs_per_sec": [
                 learned["dsir_score_docs_per_sec"],
                 learned["dsir_jvm_docs_per_sec"],
-            ],
-            # ingest LM gate docs/s: [sort-merge, broadcast_model
-            # joins, broadcast-DICT flat kernel, broadcast-DICT
-            # round-9 tuple kernel]
-            "lm_gate_docs_per_sec": [
-                learned["lm_gate_broadcast_ab"]["off"]["docs_per_sec"],
-                learned["lm_gate_broadcast_ab"]["on"]["docs_per_sec"],
-                learned["lm_gate_broadcast_ab"]["dict"]["docs_per_sec"],
-                learned["lm_gate_broadcast_ab"]["dict_tuple"]["docs_per_sec"],
-            ],
-            # round-10 raw dict-kernel A/B docs/s: [flat, tuple] —
-            # one big cached batch, Python loop is the cost
-            "lm_kernel_docs_per_sec": [
-                learned["lm_kernel_ab"]["flat"]["docs_per_sec"],
-                learned["lm_kernel_ab"]["tuple"]["docs_per_sec"],
             ],
             # round-9 gate kernel rate (merged-interval coverage)
             "gopher_rep_docs_per_sec": learned["gopher_rep_docs_per_sec"],
@@ -2029,17 +1823,14 @@ def main() -> None:
     # lives in BENCH_local.json) so each round's NEW evidence survives
     # the ~2 KB stdout budget
     droppable = [
-        "bpe_batched_sec",
         "bloom_build_probe_sec",
         "compact_read_sec",
         "knn_batch_sec",
         "ann_recall_at_10_adc",
         "bpe_train16_sec",
         "kn3_docs_per_sec",
-        "lm_kernel_docs_per_sec",
         "quality_docs_per_sec",
         "dsir_docs_per_sec",
-        "lm_gate_docs_per_sec",
         "kn5_docs_per_sec",
         "ann_tuned_adc_rr_recall",
         "ann_filtered_recall",

@@ -27,12 +27,22 @@ Algorithm (paper §3, hashed n-gram variant — their deployed one):
    ∝ w; the Gumbel noise is derived deterministically from
    (seed, doc id) so selection is reproducible and layout-independent.
 
-Scale shape: fit = one ``mapInPandas`` pass per corpus with PER-BATCH
-pre-aggregated histograms (≤ B rows per batch) + a B-bounded sum;
-weighing/resampling are map-only passes; the final top-k is a
-TakeOrdered (per-partition heap + driver merge of k·P rows), never a
-global sort.  Nothing model- or corpus-sized ever sits on the driver
-except the B-vector and the k winners.
+Two bucket families, each with one execution tier, chosen by the
+model's ``hash_fn`` (recorded at fit, so a weight never comes from
+mismatched buckets):
+
+* ``md5`` (default — the original DSIR featurizer): Arrow-batched
+  Python UDFs.  Its JVM form has to conv-parse the md5 hex per gram
+  and measured slower than Arrow.
+* ``xxhash64``: pure codegen'd JVM expressions (Spark's seed-42
+  ``xxhash64``) — no Python workers, no Arrow transfer.
+
+Scale shape: fit = one distributed pass per corpus whose partial
+aggregates are B-bounded per task + a B-bounded sum; weighing and
+resampling are map-only passes; the final top-k is a TakeOrdered
+(per-partition heap + driver merge of k·P rows), never a global sort.
+Nothing model- or corpus-sized ever sits on the driver except the
+B-vector and the k winners.
 """
 
 from __future__ import annotations
@@ -63,168 +73,55 @@ DSIR_TOKEN_RE = re.compile(r"[a-z0-9']+")
 DEFAULT_BUCKETS = 10_000
 
 
-_XXH_P1 = 0x9E3779B185EBCA87
-_XXH_P2 = 0xC2B2AE3D27D4EB4F
-_XXH_P3 = 0x165667B19E3779F9
-_XXH_P4 = 0x85EBCA77C2B2AE63
-_XXH_P5 = 0x27D4EB2F165667C5
-_U64 = (1 << 64) - 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _U64
-
-
-def _xxh64(data: bytes, seed: int = 42) -> int:
-    """Pure-Python XXH64 (Collet's public xxHash spec, 64-bit variant)
-    — the reference twin of Spark's ``xxhash64`` expression, which
-    hashes a string column's UTF-8 bytes with seed 42.  Returns the
-    SIGNED value Spark returns (two's complement of the spec's
-    unsigned digest), so ``% buckets`` agrees with Spark's ``pmod``
-    bucket math exactly.  Pinned against the JVM implementation in
-    tests; slow (per-byte Python) — the xxhash64 family's production
-    path is the JVM engine, this exists so ``engine="pandas"`` stays
-    available everywhere."""
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _XXH_P1 + _XXH_P2) & _U64
-        v2 = (seed + _XXH_P2) & _U64
-        v3 = seed & _U64
-        v4 = (seed - _XXH_P1) & _U64
-
-        def _round(acc: int, lane: int) -> int:
-            acc = (acc + lane * _XXH_P2) & _U64
-            return (_rotl(acc, 31) * _XXH_P1) & _U64
-
-        while i + 32 <= n:
-            v1 = _round(v1, int.from_bytes(data[i : i + 8], "little"))
-            v2 = _round(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
-            v3 = _round(v3, int.from_bytes(data[i + 16 : i + 24], "little"))
-            v4 = _round(v4, int.from_bytes(data[i + 24 : i + 32], "little"))
-            i += 32
-        h = (
-            _rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)
-        ) & _U64
-        for v in (v1, v2, v3, v4):
-            h ^= _round(0, v)
-            h = (h * _XXH_P1 + _XXH_P4) & _U64
-    else:
-        h = (seed + _XXH_P5) & _U64
-    h = (h + n) & _U64
-    while i + 8 <= n:
-        k = int.from_bytes(data[i : i + 8], "little")
-        k = (_rotl((k * _XXH_P2) & _U64, 31) * _XXH_P1) & _U64
-        h ^= k
-        h = (_rotl(h, 27) * _XXH_P1 + _XXH_P4) & _U64
-        i += 8
-    if i + 4 <= n:
-        h ^= (int.from_bytes(data[i : i + 4], "little") * _XXH_P1) & _U64
-        h = (_rotl(h, 23) * _XXH_P2 + _XXH_P3) & _U64
-        i += 4
-    while i < n:
-        h ^= (data[i] * _XXH_P5) & _U64
-        h = (_rotl(h, 11) * _XXH_P1) & _U64
-        i += 1
-    h ^= h >> 33
-    h = (h * _XXH_P2) & _U64
-    h ^= h >> 29
-    h = (h * _XXH_P3) & _U64
-    h ^= h >> 32
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def _bucket(ngram: str, buckets: int, hash_fn: str = "md5") -> int:
-    """Stable cross-platform hash mod buckets (Python's builtin hash()
-    is salted per process — unusable for a deterministic model).
-
-    ``md5``: first 8 bytes of MD5 as an unsigned big-endian integer —
-    the original DSIR featurizer, portable everywhere.  ``xxhash64``:
-    Spark's seed-42 XXH64 as a SIGNED long with floored-mod bucketing
-    (Python ``%`` == Spark ``pmod``) — the fast family, whose JVM
-    engine hashes without hex-string round-trips."""
-    if hash_fn == "xxhash64":
-        return _xxh64(ngram.encode("utf-8")) % buckets
+def _bucket(ngram: str, buckets: int) -> int:
+    """The md5 family's bucket: first 8 bytes of MD5 as an unsigned
+    big-endian integer, mod buckets — stable across processes
+    (Python's builtin hash() is salted per process — unusable for a
+    deterministic model)."""
     h = hashlib.md5(ngram.encode("utf-8")).digest()
     return int.from_bytes(h[:8], "big") % buckets
 
 
 def _check_buckets(buckets: int) -> None:
-    """Shared bound for every tier: ≥ 1 and < 2³¹ — the JVM md5
-    residue math and the int-typed bucket columns are exact only
-    below 2³¹, and a Python-tier fit at a larger B would produce a
-    model no JVM tier can score compatibly (advisor finding, r08)."""
+    """Shared bound for both families: ≥ 1 and < 2³¹ — the bucket
+    columns are 32-bit ints, so one model-size bound holds whichever
+    family a model was fit with."""
     if buckets < 1:
         raise ValueError("buckets must be positive")
     if buckets >= 1 << 31:
         raise ValueError(
-            f"buckets must be < 2**31 (got {buckets}): the JVM bucket "
-            "expression and the int bucket columns are exact only below "
-            "2**31, and the Python tier's unbounded-int mod would "
-            "silently diverge from it"
+            f"buckets must be < 2**31 (got {buckets}): the bucket "
+            "columns are 32-bit ints"
         )
 
 
-def _doc_buckets(
-    text: str, buckets: int, hash_fn: str = "md5"
-) -> list[int]:
-    """Hashed unigram+bigram bucket ids for one document (with
-    multiplicity — the bag, not the set)."""
+def _doc_buckets(text: str, buckets: int) -> list[int]:
+    """Hashed (md5 family) unigram+bigram bucket ids for one document
+    (with multiplicity — the bag, not the set)."""
     toks = DSIR_TOKEN_RE.findall((text or "").lower())
-    out = [_bucket(t, buckets, hash_fn) for t in toks]
+    out = [_bucket(t, buckets) for t in toks]
     out.extend(
-        _bucket(toks[i] + " " + toks[i + 1], buckets, hash_fn)
+        _bucket(toks[i] + " " + toks[i + 1], buckets)
         for i in range(len(toks) - 1)
     )
     return out
 
 
-def dsir_bucket_expr(
-    gram: Column, buckets: int, hash_fn: str = "md5"
-) -> Column:
-    """``_bucket`` as a pure JVM expression — the SAME function per
-    hash family, so the engine tiers are model-compatible.
-
-    ``md5``: first 8 bytes of MD5 as an unsigned 64-bit integer, mod
-    ``buckets``.  The unsigned value can exceed Long.MAX, so it is
-    split into two 32-bit words (each parses into a long) and the mod
-    is taken in residue arithmetic — (hi·2³² + lo) mod B =
-    ((hi mod B)·(2³² mod B) + lo mod B) mod B — keeping everything in
-    codegen'd LONG math (a DECIMAL(20,0) pmod would drop to BigDecimal
-    per gram).
-
-    Exact ONLY for B < 2³¹: the residue identity needs
-    (B−1)·(2³² mod B) + (B−1) to stay under 2⁶³, and the bucket column
-    is a 32-bit int in both tiers — Python ints are unbounded, so a
-    larger B would silently diverge from the exact-big-int Python tier
-    instead of erroring.  Rejected eagerly here (and the pandas-only
-    paths validate at their own entry points).
-
-    ``xxhash64``: ``pmod(xxhash64(gram), B)`` — one native expression
-    straight off the UTF8 bytes, no hex-string round-trip; ~3× cheaper
-    than the md5 chain (measured) and the family a throughput-bound
-    deployment should fit with."""
+def dsir_bucket_expr(gram: Column, buckets: int) -> Column:
+    """The xxhash64 family's bucket as one JVM expression:
+    ``pmod(xxhash64(gram), B)`` — Spark's seed-42 XXH64 of the UTF-8
+    bytes as a SIGNED long, floored-mod bucketed; no hex-string
+    round-trip (~3× cheaper than an md5 chain, measured)."""
     _check_buckets(buckets)
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(gram), F.lit(buckets)).cast("int")
-    hex32 = F.md5(gram)
-    hi = F.conv(F.substring(hex32, 1, 8), 16, 10).cast("long")
-    lo = F.conv(F.substring(hex32, 9, 8), 16, 10).cast("long")
-    b = F.lit(buckets).cast("long")
-    two32_mod = F.lit((1 << 32) % buckets).cast("long")
-    return F.pmod(
-        F.pmod(hi, b) * two32_mod + F.pmod(lo, b), b
-    ).cast("int")
+    return F.pmod(F.xxhash64(gram), F.lit(buckets)).cast("int")
 
 
-def doc_bucket_array(
-    text: Column, buckets: int, hash_fn: str = "md5"
-) -> Column:
-    """``_doc_buckets`` as a pure JVM expression: array<int> of hashed
-    unigram+bigram bucket ids (with multiplicity, document order —
-    unigrams first, then bigrams, exactly the Python tier's layout).
-    Tokenization mirrors ``DSIR_TOKEN_RE`` via ``regexp_extract_all``
-    over the lowercased text."""
+def doc_bucket_array(text: Column, buckets: int) -> Column:
+    """The xxhash64 family's per-doc bag as a pure JVM expression:
+    array<int> of hashed unigram+bigram bucket ids (with multiplicity,
+    document order — unigrams first, then bigrams, the md5 tier's
+    layout).  Tokenization mirrors ``DSIR_TOKEN_RE`` via
+    ``regexp_extract_all`` over the lowercased text."""
     toks = F.regexp_extract_all(
         F.lower(F.coalesce(text, F.lit(""))), F.lit(r"[a-z0-9']+"), 0
     )
@@ -238,52 +135,41 @@ def doc_bucket_array(
         ),
     ).otherwise(F.array().cast("array<string>"))
     grams = F.concat(toks, bigrams)
-    return F.transform(
-        grams, lambda g: dsir_bucket_expr(g, buckets, hash_fn)
-    )
+    return F.transform(grams, lambda g: dsir_bucket_expr(g, buckets))
 
 
 def hashed_ngram_counts(
     df: DataFrame,
     text_col: str = "text",
     buckets: int = DEFAULT_BUCKETS,
-    engine: str = "pandas",
     hash_fn: str = "md5",
 ) -> DataFrame:
-    """(bucket, cnt) totals for a corpus — ONE distributed pass.
+    """(bucket, cnt) totals for a corpus — ONE distributed pass, in
+    the tier of the ``hash_fn`` family (see the module docstring).
 
-    ``engine="pandas"`` (portable default): per-batch pre-aggregated
-    histograms from ``mapInPandas`` (at most ``buckets`` rows per Arrow
-    batch) + a bucket-keyed sum whose result is B-bounded.
+    ``md5``: per-batch pre-aggregated histograms from ``mapInPandas``
+    (at most ``buckets`` rows per Arrow batch) + a bucket-keyed sum
+    whose result is B-bounded.
 
-    ``engine="jvm"`` (round 8, the no-Python-workers tier): the
-    identical bucket function as codegen'd expressions — explode the
-    per-doc bucket array and count; Spark's partial aggregation
-    collapses each task's grams to ≤ B rows before the exchange, so
-    the shuffle is B-bounded per task exactly like the pandas tier's.
-    Same counts, bit-for-bit (pinned).
-
-    ``hash_fn`` picks the bucket family (see ``dsir_bucket_expr``):
-    ``md5`` is the portable original; ``xxhash64`` is the measured-
-    faster JVM family, also available to the pandas engine via the
-    in-package XXH64 port."""
+    ``xxhash64``: explode the per-doc bucket array and count as
+    codegen'd expressions; Spark's partial aggregation collapses each
+    task's grams to ≤ B rows before the exchange, so the shuffle is
+    B-bounded per task like the md5 tier's."""
     if hash_fn not in ("md5", "xxhash64"):
         raise ValueError(
             f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}"
         )
     _check_buckets(buckets)
-    if engine == "jvm":
+    if hash_fn == "xxhash64":
         return (
             df.select(
-                F.explode(
-                    doc_bucket_array(F.col(text_col), buckets, hash_fn)
-                ).alias("bucket")
+                F.explode(doc_bucket_array(F.col(text_col), buckets)).alias(
+                    "bucket"
+                )
             )
             .groupBy(F.col("bucket").cast("long").alias("bucket"))
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-    if engine != "pandas":
-        raise ValueError(f"engine must be 'pandas' or 'jvm', got {engine!r}")
     import numpy as np
     import pandas as pd
 
@@ -293,7 +179,7 @@ def hashed_ngram_counts(
         hist = np.zeros(b, dtype=np.int64)
         for pdf in batches:
             for t in pdf[text_col]:
-                for bucket in _doc_buckets(t, b, hash_fn):
+                for bucket in _doc_buckets(t, b):
                     hist[bucket] += 1
         nz = np.flatnonzero(hist)
         yield pd.DataFrame({"bucket": nz.astype(np.int64), "cnt": hist[nz]})
@@ -377,31 +263,24 @@ def dsir_fit(
     text_col: str = "text",
     buckets: int = DEFAULT_BUCKETS,
     smoothing: float = 1.0,
-    engine: str = "pandas",
     hash_fn: str = "md5",
 ) -> DsirModel:
     """Fit p̂_target / p̂_raw over hashed n-gram buckets (add-λ
     smoothed) and return their per-bucket log ratio.  Two distributed
     histogram passes; everything after the B-bounded collect is
-    driver-side float math.  ``engine="jvm"`` runs the histogram
-    passes as pure codegen'd expressions (identical bucket function →
-    identical model, pinned; no Python workers).  ``hash_fn``
-    ("md5" default / "xxhash64" the fast JVM family) is recorded on
-    the model and drives every later scoring pass."""
+    driver-side float math.  ``hash_fn`` ("md5" default, Arrow tier /
+    "xxhash64", JVM tier) is recorded on the model and picks the tier
+    of every later scoring pass."""
     _check_buckets(buckets)
     if smoothing <= 0.0:
         raise ValueError("smoothing must be > 0 (unsmoothed ratios diverge)")
     t_counts = {
         r["bucket"]: r["cnt"]
-        for r in hashed_ngram_counts(
-            target, text_col, buckets, engine, hash_fn
-        ).collect()
+        for r in hashed_ngram_counts(target, text_col, buckets, hash_fn).collect()
     }
     r_counts = {
         r["bucket"]: r["cnt"]
-        for r in hashed_ngram_counts(
-            raw, text_col, buckets, engine, hash_fn
-        ).collect()
+        for r in hashed_ngram_counts(raw, text_col, buckets, hash_fn).collect()
     }
     if not t_counts or not r_counts:
         raise ValueError("empty corpus: both target and raw need tokens")
@@ -420,22 +299,20 @@ def dsir_log_weights(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "dsir_logw",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Append log w(x) = Σ n-gram log-ratios — map-only (the plan is
     pinned Exchange-free): at 100 TB the weigher runs at parquet scan
     speed, like the quality classifier it complements.  Empty/NULL text
     weighs 0 (an even ratio), never NULL.
 
-    ``engine="jvm"`` (round 8): the whole weigh is ONE codegen'd
-    expression — the B-vector rides a SINGLE-ROW broadcast frame (the
-    repo's stats-frame idiom; an inline array literal would cost B
-    py4j calls + a B-child analyzer pass PER JOB) and each doc folds
-    element lookups over its bucket array (``aggregate`` over
-    ``transform``), in the same document gram order as the pandas
-    tier, so the sums agree to float tolerance with NO Python workers
+    An md5 model weighs in one Arrow-batched pass.  An xxhash64 model
+    weighs as ONE codegen'd expression — the B-vector rides a
+    SINGLE-ROW broadcast frame (the repo's stats-frame idiom; an
+    inline array literal would cost B py4j calls + a B-child analyzer
+    pass PER JOB) and each doc folds element lookups over its bucket
+    array (``aggregate`` over ``transform``), with NO Python workers
     and NO Arrow transfer in the hot path."""
-    if engine == "jvm":
+    if model.hash_fn == "xxhash64":
         spark = df.sparkSession
         ratio_col = "_dsir_ratio"
         while ratio_col in df.columns:
@@ -445,9 +322,7 @@ def dsir_log_weights(
         )
         logw = F.aggregate(
             F.transform(
-                doc_bucket_array(
-                    F.col(text_col), model.buckets, model.hash_fn
-                ),
+                doc_bucket_array(F.col(text_col), model.buckets),
                 lambda bkt: F.element_at(F.col(ratio_col), bkt + F.lit(1)),
             ),
             F.lit(0.0),
@@ -458,20 +333,17 @@ def dsir_log_weights(
             .withColumn(out_col, logw)
             .drop(ratio_col)
         )
-    if engine != "pandas":
-        raise ValueError(f"engine must be 'pandas' or 'jvm', got {engine!r}")
     import numpy as np
     import pandas as pd
 
     ratio = np.asarray(model.log_ratio, dtype=np.float64)
     b = model.buckets
-    hf = model.hash_fn
 
     def weigh(batches: Iterator["pd.Series"]) -> Iterator["pd.Series"]:
         for texts in batches:
             yield pd.Series(
                 [
-                    float(ratio[_doc_buckets(t, b, hf)].sum())
+                    float(ratio[_doc_buckets(t, b)].sum())
                     for t in texts
                 ],
                 dtype=np.float64,
@@ -512,7 +384,6 @@ def dsir_ess(
     model: DsirModel,
     df: DataFrame,
     text_col: str = "text",
-    engine: str = "pandas",
 ) -> dict[str, float]:
     """Importance-sampling health check: effective sample size
     ESS = (Σw)²/Σw² over the candidate pool (Kong 1992's classic
@@ -524,7 +395,7 @@ def dsir_ess(
     aggregate; weights are exponentiated around their max for
     overflow-safe Σw and Σw² (the standard log-sum-exp shift —
     RELATIVE weights are all ESS needs)."""
-    w = dsir_log_weights(model, df, text_col, engine=engine)
+    w = dsir_log_weights(model, df, text_col)
     mx = w.agg(F.max("dsir_logw").alias("m")).collect()[0]["m"]
     if mx is None:
         return {"ess": 0.0, "n": 0, "ess_fraction": 0.0}
@@ -547,7 +418,6 @@ def dsir_resample(
     seed: int = 0,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Select k documents WITHOUT replacement with probability ∝ w(x)
     — the Gumbel top-k trick: perturb each log-weight with deterministic
@@ -560,7 +430,7 @@ def dsir_resample(
     duplicated ids would be selected all-or-nothing."""
     if k < 1:
         raise ValueError("k must be positive")
-    weighted = dsir_log_weights(model, df, text_col, engine=engine)
+    weighted = dsir_log_weights(model, df, text_col)
     key = gumbel_key_expr("dsir_logw", id_col, seed)
     # column hygiene: re-selecting an input that already carries
     # dsir_logw must not produce a duplicate-named column, and the

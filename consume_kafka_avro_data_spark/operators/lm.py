@@ -1,5 +1,5 @@
 """Distributed n-gram language modeling — interpolated Kneser-Ney
-bigrams (charter U7), the LM tier of the curation stack.
+(charter U7), the LM tier of the curation stack.
 
 Public-knowledge lineage: CCNet (Wenzek et al. 2020) and the GPT-3
 pipeline filter web text by LANGUAGE-MODEL perplexity (CCNet uses a
@@ -7,34 +7,25 @@ KenLM 5-gram); the published smoothing standard for count-based LMs is
 interpolated Kneser-Ney (Kneser & Ney 1995; Chen & Goodman 1999's
 empirical study).  The repo's existing ``q_perplexity`` certifies the
 unigram form end-to-end against a SQL oracle; this module adds the
-bigram-KN upgrade as a library operator — richer signal for the same
-per-doc scoring shape.
+order-n KN upgrade (:class:`NgramKN`) as a library operator — richer
+signal for the same per-doc scoring shape.
 
-Interpolated KN, bigram order (Chen & Goodman eq. 4.17 family):
+The fit is RELATIONAL — counts, distinct-follower counts, and the
+interpolation are joins/aggregations over the gram tables, so Catalyst
+plans the whole fit, and nothing model-sized lives on the driver.  A
+fitted model scores two ways, value-identical (pinned):
 
-    P(w2|w1) = max(c(w1 w2) − D, 0) / c(w1·)  +  λ(w1) · Pcont(w2)
-    λ(w1)    = D · N1+(w1 ·) / c(w1·)
-    Pcont(w2)= N1+(· w2) / N1+(· ·)
-
-Everything is RELATIONAL — counts, distinct-follower counts, and the
-interpolation are joins/aggregations over the bigram table, so Catalyst
-plans the whole fit:
-
-* doc → bigrams is map-only (zip_with over adjacent slices of the
-  token array — no window, no shuffle for pairing);
-* ONE corpus-sized shuffle produces the bigram count table; every
-  later table (context totals, follower/predecessor type counts) is a
-  vocabulary-bounded aggregate of it;
-* scoring joins each doc's bigrams against the prob table (observed
-  mass) with λ/Pcont fallbacks via two left joins — unseen events
-  back off exactly as the formula says, and a configurable floor
-  bounds fully-OOV bigrams away from log(0).
+* :meth:`NgramKN.score` left-joins each doc's n-grams against the
+  per-order prob/λ tables — the path for models of any size;
+* :meth:`NgramKN.score_broadcast` ships a model under
+  ``MAX_LOCAL_MODEL_ROWS`` to the workers once as a broadcast dict and
+  scores in one Arrow pass with no model joins.
 
 Determinism: exact integer counts throughout; the only floats are the
 final divisions, identical across layouts.  The pure-Python reference
-implementation in tests/test_lm.py pins the Spark tables value-for-
-value on a toy corpus, and a property test checks Σ_w2 P(w2|w1) = 1
-per seen context — the signature KN invariant.
+implementations in tests/test_lm.py and tests/test_ngram_lm.py pin the
+Spark tables value-for-value on toy corpora, and property tests check
+Σ_w P(w|ctx) = 1 per seen context — the signature KN invariant.
 """
 
 from __future__ import annotations
@@ -82,79 +73,6 @@ def _py_tokens(text: str | None) -> list[str]:
     return _JVM_WS_RE.split((text or "").lower())
 
 
-def flatten_local_tables(local: dict) -> dict:
-    """Re-key a :meth:`NgramKN.local_tables` payload for the round-10
-    FLAT scoring kernel: every model token is interned to a small int
-    (``vocab``), and every probs/lams key becomes a tuple of ints.
-
-    Why: the round-9 kernel's per-gram cost is string-tuple
-    construction + string hashing per backoff tier
-    (``tuple(g[lo:n])`` over token STRINGS, whose hashes are
-    recomputed for every fresh slice).  Int tuples hash in a few ns
-    each, and — the bigger lever — interning makes grams CACHEABLE:
-    two occurrences of the same surface gram map to the same id tuple,
-    so the flat kernel memoizes the whole backoff cascade per distinct
-    gram per batch (natural text repeats grams heavily; Zipf does the
-    rest).  Collapsing every out-of-vocabulary token to the single
-    sentinel ``-1`` is score-preserving: no model key contains an OOV
-    token, so every dict probe touching an OOV position misses
-    REGARDLESS of which OOV token it is, and probes not touching those
-    positions see the same interned ids — the cascade result depends
-    only on (known-token ids, OOV position pattern), which is exactly
-    what the collapsed key encodes.
-
-    The payload is marked by its ``vocab`` key; ``score_broadcast``
-    dispatches kernels on that marker, so either layout can ride the
-    stream-lifetime broadcast variable."""
-    n = int(local["order"])
-    vocab: dict = {}
-
-    def vid(t):
-        i = vocab.get(t)
-        if i is None:
-            i = len(vocab)
-            vocab[t] = i
-        return i
-
-    p1 = {vid(t): p for t, p in local["p1"].items()}
-    probs = {
-        k: {
-            tuple(vid(t) for t in key): p
-            for key, p in local["probs"][k].items()
-        }
-        for k in range(2, n + 1)
-    }
-    lams = {
-        k: {
-            tuple(vid(t) for t in key): p
-            for key, p in local["lams"][k].items()
-        }
-        for k in range(2, n + 1)
-    }
-    return {"order": n, "vocab": vocab, "probs": probs, "lams": lams, "p1": p1}
-
-
-def doc_bigrams(
-    docs: DataFrame, text_col: str = "text", keep_cols: list[str] | None = None
-) -> DataFrame:
-    """(…keep_cols, w1, w2) — one row per adjacent token pair per doc,
-    tokenized by the corpus-wide convention (lowercase, whitespace,
-    NULL → '').  Map-only: the pairing is zip_with over adjacent
-    slices of the token array; docs with <2 tokens emit no rows."""
-    toks = tokens_col(text_col)
-    n = F.size(toks)
-    pairs = F.zip_with(
-        F.slice(toks, 1, n - 1),
-        F.slice(toks, 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    keep = list(keep_cols or [])
-    return (
-        docs.select(*keep, F.explode(pairs).alias("_bg"))
-        .select(*keep, F.col("_bg.w1").alias("w1"), F.col("_bg.w2").alias("w2"))
-    )
-
-
 def doc_ngrams(
     docs: DataFrame,
     order: int,
@@ -162,13 +80,13 @@ def doc_ngrams(
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """(…keep_cols, w1 … w{order}) — one row per length-``order``
-    token window per doc, tokenized by the corpus-wide convention.
-    Map-only like :func:`doc_bigrams`, and built the same way: zip
-    ``order`` shifted slices of the token array (``arrays_zip`` — a
-    native expression, where a transform-over-indexes lambda is
-    interpreted at ~tens of µs per element and measured ~9× slower at
-    order 3).  Docs with < order tokens take the NULL branch, which
-    ``explode`` drops — no rows, the bigram convention."""
+    token window per doc, tokenized by the corpus-wide convention
+    (lowercase, whitespace, NULL → '').  Map-only: zip ``order``
+    shifted slices of the token array (``arrays_zip`` — a native
+    expression, where a transform-over-indexes lambda is interpreted
+    at ~tens of µs per element and measured ~9× slower at order 3).
+    Docs with < order tokens take the NULL branch, which ``explode``
+    drops — no rows."""
     if order < 1:
         raise ValueError(f"ngram order must be >= 1, got {order}")
     toks = tokens_col(text_col)
@@ -218,10 +136,11 @@ class NgramKN:
     folds the backoff cascade in ONE expression:
     P̂_k = coalesce(p_k, coalesce(λ_k, 1) · P̂_{k−1}) — observed gram →
     full interpolated mass; unseen gram, seen context → λ·lower;
-    unseen context → lower unweighted; fully-OOV floors.  For n=2
-    this reproduces :class:`BigramKN` value-for-value (pinned in
-    tests), and the per-context Σ_w P_k(w|ctx) = 1 invariant holds at
-    EVERY order (pinned against a pure-Python reference)."""
+    unseen context → lower unweighted; fully-OOV floors.  At n=2 this
+    is the textbook interpolated-KN bigram (pinned against its
+    formulas in tests/test_lm.py), and the per-context
+    Σ_w P_k(w|ctx) = 1 invariant holds at EVERY order (pinned against
+    a pure-Python reference)."""
 
     def __init__(
         self,
@@ -241,7 +160,9 @@ class NgramKN:
 
     def unpersist(self) -> None:
         """Release the fitted model's checkpointed count tables (its
-        resident state) — same lifecycle contract as BigramKN."""
+        resident state).  The model's DataFrames re-derive from lineage
+        after this, but every action re-runs the corpus count — call
+        when done with the model."""
         for df in self._resident:
             df.unpersist()
 
@@ -263,10 +184,9 @@ class NgramKN:
         back off like unseen ones; every derived table, λ, and the
         per-context mass law stay self-consistent — pinned against a
         reference implementing the same pruning).  This is the lever
-        that keeps the model tables broadcastable when fitting on a
-        large trusted corpus (singleton top-order grams dominate table
-        size by Zipf), enabling ``score(broadcast_model=True)``'s
-        map-only sweep."""
+        that keeps a model fit on a large trusted corpus under
+        ``MAX_LOCAL_MODEL_ROWS`` (singleton top-order grams dominate
+        table size by Zipf), so :meth:`score_broadcast` can serve it."""
         if order < 2:
             raise ValueError(f"NgramKN order must be >= 2, got {order}")
         if not 0.0 < discount < 1.0:
@@ -455,25 +375,19 @@ class NgramKN:
         text_col: str = "text",
         id_col: str = "doc_id",
         p_floor: float = 1e-9,
-        broadcast_model: bool = False,
     ) -> DataFrame:
         """(id_col, n_ngrams, avg_nll) — per-document mean negative
         log-likelihood of its order-n token windows, the CCNet-style
-        quality signal.  Docs with < order tokens report n_ngrams=0
-        and NULL avg_nll (no evidence ≠ perfect fluency), and NULL-id
-        docs keep their scores — both the BigramKN conventions.
+        quality signal (lower = more natural under the training
+        corpus).  Docs with < order tokens report n_ngrams=0 and NULL
+        avg_nll (no evidence ≠ perfect fluency), and NULL-id docs keep
+        their scores.
 
-        ``broadcast_model=True`` hints every model table into the
-        joins' build side, making the whole score MAP-ONLY up to the
-        final per-doc aggregate — the deployed CCNet shape, where the
-        filter model is fit once on a bounded trusted corpus (possibly
-        pruned, see ``fit(min_count=…)``) and then sweeps petabytes:
-        without the hint, each of the 2n−1 joins can sort-merge, which
-        shuffles the corpus-sized gram table once PER ORDER.  Leave
-        False when the model's gram-type tables rival executor memory
-        (an unpruned model fit on a huge corpus)."""
+        The relational scorer: 2n−1 left joins against the model
+        tables, so it serves a model of any size — the path for models
+        past ``MAX_LOCAL_MODEL_ROWS``, and the reference
+        :meth:`score_broadcast` is pinned to."""
         n = self.order
-        hint = F.broadcast if broadcast_model else (lambda df: df)
         grams = doc_ngrams(docs, n, text_col, keep_cols=[id_col])
         j = grams
         # one left join per prob/λ table; at order k the evaluated
@@ -487,7 +401,7 @@ class NgramKN:
                 ],
                 F.col("p").alias(f"_p{k}"),
             )
-            j = j.join(hint(pk), [f"w{lo + i + 1}" for i in range(k)], "left")
+            j = j.join(pk, [f"w{lo + i + 1}" for i in range(k)], "left")
             lk = self.lams[k].select(
                 *[
                     F.col(f"w{i + 1}").alias(f"w{lo + i + 1}")
@@ -495,11 +409,9 @@ class NgramKN:
                 ],
                 F.col("lam").alias(f"_lam{k}"),
             )
-            j = j.join(
-                hint(lk), [f"w{lo + i + 1}" for i in range(k - 1)], "left"
-            )
+            j = j.join(lk, [f"w{lo + i + 1}" for i in range(k - 1)], "left")
         j = j.join(
-            hint(self.p1.select(F.col("w1").alias(f"w{n}"), "p1")),
+            self.p1.select(F.col("w1").alias(f"w{n}"), "p1"),
             [f"w{n}"],
             "left",
         )
@@ -520,6 +432,9 @@ class NgramKN:
                 (-F.sum(F.log("_p")) / F.count(F.lit(1))).alias("avg_nll"),
             )
         )
+        # <order-token docs emitted no gram rows: restore them with NULL
+        # scores.  NULL-SAFE id join — a NULL-id doc's score must reach
+        # its row (groupBy above already grouped NULL ids together)
         ids = docs.select(id_col).distinct()
         return ids.join(
             scored,
@@ -531,14 +446,13 @@ class NgramKN:
             "avg_nll",
         )
 
-    # -- dict-scorer tier (round 9) ----------------------------------------
+    # -- broadcast-dict scorer ---------------------------------------------
 
     def model_rows(self) -> int:
         """Total rows across every model table — THE broadcastability
-        number: bench reports it per pruning arm, ``local_tables``
-        guards on it, and the ingest gate's auto-broadcast resolution
-        compares it to ``MAX_LOCAL_MODEL_ROWS`` before defaulting the
-        per-batch joins onto executor heaps."""
+        number: ``local_tables`` guards on it, and the ingest gate
+        compares it to ``MAX_LOCAL_MODEL_ROWS`` once at construction to
+        pick :meth:`score_broadcast` or :meth:`score`."""
         return (
             sum(df.count() for df in self.probs.values())
             + sum(df.count() for df in self.lams.values())
@@ -553,9 +467,7 @@ class NgramKN:
         broadcast variable.  Guarded: refuses past ``max_rows`` total
         model rows (count first, collect second), because an unpruned
         web-scale fit belongs on the relational scorer, not in every
-        executor's heap.  Layout: ``probs[k]`` maps the k-token suffix
-        tuple → p, ``lams[k]`` maps the (k−1)-token context tuple → λ,
-        ``p1`` maps token → continuation unigram."""
+        executor's heap.  Layout: see :meth:`_tables_payload`."""
         total = self.model_rows()
         if total > max_rows:
             raise ValueError(
@@ -563,15 +475,44 @@ class NgramKN:
                 f"of {max_rows} — re-fit with min_count pruning (the "
                 "deployed shape) or score relationally"
             )
+        return self._tables_payload()
+
+    def _tables_payload(self) -> dict:
+        """The unguarded collect behind :meth:`local_tables`: every
+        model token is interned to a small int (``vocab``); ``probs[k]``
+        maps the k-token suffix id tuple → p, ``lams[k]`` maps the
+        (k−1)-token context id tuple → λ, ``p1`` maps token id →
+        continuation unigram.
+
+        Why ints: int tuples hash in a few ns each, and interning makes
+        grams CACHEABLE — two occurrences of the same surface gram map
+        to the same id tuple, so the kernel memoizes the whole backoff
+        cascade per distinct gram per batch (measured 43.8k vs 35.8k
+        docs/s against string-tuple keys).  Collapsing every
+        out-of-vocabulary token to the single sentinel ``-1`` is
+        score-preserving: no model key contains an OOV token, so every
+        dict probe touching an OOV position misses REGARDLESS of which
+        OOV token it is, and probes not touching those positions see
+        the same interned ids."""
         n = self.order
+        vocab: dict = {}
+
+        def vid(t):
+            i = vocab.get(t)
+            if i is None:
+                i = len(vocab)
+                vocab[t] = i
+            return i
+
         # Select columns BY NAME before collecting: the relational
         # scorer resolves w1..wk/p by name, so the dict tier must too —
         # keying by row POSITION would silently mis-key the model (and
         # shift every score with no error) for any table whose column
         # order ever diverges (schema evolution, an external writer).
+        p1 = {vid(r[0]): r[1] for r in self.p1.select("w1", "p1").collect()}
         probs = {
             k: {
-                tuple(r[i] for i in range(k)): r[k]
+                tuple(vid(r[i]) for i in range(k)): r[k]
                 for r in self.probs[k]
                 .select(*[f"w{i + 1}" for i in range(k)], "p")
                 .collect()
@@ -580,23 +521,14 @@ class NgramKN:
         }
         lams = {
             k: {
-                tuple(r[i] for i in range(k - 1)): r[k - 1]
+                tuple(vid(r[i]) for i in range(k - 1)): r[k - 1]
                 for r in self.lams[k]
                 .select(*[f"w{i + 1}" for i in range(k - 1)], "lam")
                 .collect()
             }
             for k in range(2, n + 1)
         }
-        p1 = {r[0]: r[1] for r in self.p1.select("w1", "p1").collect()}
-        return {"order": n, "probs": probs, "lams": lams, "p1": p1}
-
-    def local_tables_flat(
-        self, max_rows: int = MAX_LOCAL_MODEL_ROWS
-    ) -> dict:
-        """:meth:`local_tables` in the FLAT layout
-        (:func:`flatten_local_tables`) — the round-10 kernel's
-        payload.  Same row-ceiling guard, same one-collect contract."""
-        return flatten_local_tables(self.local_tables(max_rows))
+        return {"order": n, "vocab": vocab, "probs": probs, "lams": lams, "p1": p1}
 
     def score_broadcast(
         self,
@@ -605,7 +537,6 @@ class NgramKN:
         id_col: str = "doc_id",
         p_floor: float = 1e-9,
         max_model_rows: int = MAX_LOCAL_MODEL_ROWS,
-        kernel: str = "flat",
         _local: dict | None = None,
     ) -> DataFrame:
         """(id_col, n_ngrams, avg_nll) — :meth:`score`'s contract from
@@ -623,8 +554,8 @@ class NgramKN:
         column stays JVM-side end to end and keeps its exact type and
         null mask for ANY id type (an id through the Arrow→pandas
         round-trip would widen nullable int64 to float64 and silently
-        round ids past 2⁵³ — the round-9 review finding; pinned with a
-        2⁵³+1 id + NULL regression test).
+        round ids past 2⁵³; pinned with a 2⁵³+1 id + NULL regression
+        test).
 
         Value-identical to the relational scorer by construction —
         same tokenization (``_py_tokens`` mirrors the JVM convention
@@ -645,28 +576,14 @@ class NgramKN:
         aggregate per DISTINCT id (NULLs one group) via the narrow
         (id, count, Σlog) aggregate that follows the Arrow pass.
 
-        ``kernel`` picks the Python-side scoring loop (round 10):
-        ``"flat"`` (default) interns tokens to ints and memoizes the
-        backoff cascade per distinct gram per batch
-        (:func:`flatten_local_tables` — measured the faster arm in
-        bench.py's four-arm ``lm_gate_broadcast_ab``); ``"tuple"`` is
-        the round-9 string-tuple kernel, kept for the A/B and as the
-        reference the flat arm is pinned against.  Both are
-        value-identical to :meth:`score` by pytest pin.
-
         ``_local`` lets a long-lived caller (the ingest gate) collect
         the dicts once and reuse them across scoring calls — pass the
-        result of :meth:`local_tables` / :meth:`local_tables_flat`, or
-        an already-broadcast ``Broadcast`` of either (the streaming
-        shape: ONE broadcast for the stream's whole life, instead of
-        one fresh broadcast variable per micro-batch waiting on the
-        ContextCleaner).  A provided payload's LAYOUT wins over
-        ``kernel`` — the broadcast already exists, re-keying it per
-        call would defeat the collect-once contract."""
+        result of :meth:`local_tables`, or an already-broadcast
+        ``Broadcast`` of it (the streaming shape: ONE broadcast for the
+        stream's whole life, instead of one fresh broadcast variable
+        per micro-batch waiting on the ContextCleaner)."""
         from pyspark.broadcast import Broadcast
 
-        if kernel not in ("tuple", "flat"):
-            raise ValueError(f"kernel must be 'tuple' or 'flat', got {kernel!r}")
         spark = docs.sparkSession
         if isinstance(_local, Broadcast):
             bc, local = _local, _local.value  # .value is driver-cached
@@ -676,8 +593,6 @@ class NgramKN:
                 if _local is not None
                 else self.local_tables(max_model_rows)
             )
-            if _local is None and kernel == "flat":
-                local = flatten_local_tables(local)
             bc = spark.sparkContext.broadcast(local)
         n = int(local["order"])
         if n != self.order:
@@ -686,81 +601,48 @@ class NgramKN:
             )
         floor = float(p_floor)
 
-        if "vocab" in local:  # flat layout (see flatten_local_tables)
-
-            @F.pandas_udf("struct<_n: long, _slp: double>")
-            def kn_partials(texts: pd.Series) -> pd.DataFrame:
-                m = bc.value
-                vget = m["vocab"].get
-                p1 = m["p1"]
-                # hoisted per batch: (suffix offset, probs_k, lams_k)
-                # per tier, highest order last — no per-gram dict-of-
-                # dict indexing
-                tiers = [
-                    (n - k, m["probs"][k], m["lams"][k])
-                    for k in range(2, n + 1)
-                ]
-                log = math.log
-                counts, sums = [], []
-                cache: dict = {}  # gram-id tuple -> final log P̂
-                cget = cache.get
-                for text in texts:
-                    toks = _py_tokens(text)
-                    w = len(toks) - (n - 1)
-                    s = 0.0
-                    if w <= 0:
-                        w = 0
-                    else:
-                        ids = [vget(t, -1) for t in toks]
-                        for i in range(w):
-                            g = tuple(ids[i : i + n])
-                            v = cget(g)
-                            if v is None:
-                                ph = p1.get(g[n - 1], 0.0)
-                                for lo, pks, lms in tiers:
-                                    pk = pks.get(g[lo:])
-                                    if pk is not None:
-                                        ph = pk
-                                    else:
-                                        lam = lms.get(g[lo : n - 1])
-                                        ph = (1.0 if lam is None else lam) * ph
-                                v = log(ph if ph > floor else floor)
-                                cache[g] = v
-                            s += v
-                    counts.append(w)
-                    sums.append(s)
-                return pd.DataFrame({"_n": counts, "_slp": sums})
-
-        else:
-
-            @F.pandas_udf("struct<_n: long, _slp: double>")
-            def kn_partials(texts: pd.Series) -> pd.DataFrame:
-                m = bc.value
-                probs, lams, p1 = m["probs"], m["lams"], m["p1"]
-                log = math.log
-                counts, sums = [], []
-                for text in texts:
-                    toks = _py_tokens(text)
-                    w = len(toks) - (n - 1)
-                    s = 0.0
-                    if w <= 0:
-                        w = 0
-                    else:
-                        for i in range(w):
-                            g = toks[i : i + n]
+        @F.pandas_udf("struct<_n: long, _slp: double>")
+        def kn_partials(texts: pd.Series) -> pd.DataFrame:
+            m = bc.value
+            vget = m["vocab"].get
+            p1 = m["p1"]
+            # hoisted per batch: (suffix offset, probs_k, lams_k) per
+            # tier, highest order last — no per-gram dict-of-dict
+            # indexing
+            tiers = [
+                (n - k, m["probs"][k], m["lams"][k])
+                for k in range(2, n + 1)
+            ]
+            log = math.log
+            counts, sums = [], []
+            cache: dict = {}  # gram-id tuple -> final log P̂
+            cget = cache.get
+            for text in texts:
+                toks = _py_tokens(text)
+                w = len(toks) - (n - 1)
+                s = 0.0
+                if w <= 0:
+                    w = 0
+                else:
+                    ids = [vget(t, -1) for t in toks]
+                    for i in range(w):
+                        g = tuple(ids[i : i + n])
+                        v = cget(g)
+                        if v is None:
                             ph = p1.get(g[n - 1], 0.0)
-                            for k in range(2, n + 1):
-                                lo = n - k
-                                pk = probs[k].get(tuple(g[lo:n]))
+                            for lo, pks, lms in tiers:
+                                pk = pks.get(g[lo:])
                                 if pk is not None:
                                     ph = pk
                                 else:
-                                    lam = lams[k].get(tuple(g[lo : n - 1]))
+                                    lam = lms.get(g[lo : n - 1])
                                     ph = (1.0 if lam is None else lam) * ph
-                            s += log(ph if ph > floor else floor)
-                    counts.append(w)
-                    sums.append(s)
-                return pd.DataFrame({"_n": counts, "_slp": sums})
+                            v = log(ph if ph > floor else floor)
+                            cache[g] = v
+                        s += v
+                counts.append(w)
+                sums.append(s)
+            return pd.DataFrame({"_n": counts, "_slp": sums})
 
         partials = docs.select(
             id_col, kn_partials(F.col(text_col)).alias("_s")
@@ -773,156 +655,6 @@ class NgramKN:
             F.when(
                 F.sum("_n") > 0, -F.sum("_slp") / F.sum("_n")
             ).alias("avg_nll"),
-        )
-
-
-class BigramKN:
-    """Fitted interpolated-KN bigram model: three driverless tables —
-    ``probs`` (w1, w2, p) for observed bigrams, ``contexts`` (w1, lam)
-    for backoff weights, ``cont`` (w2, pcont) for the continuation
-    distribution — plus the scalar discount/type-count.  All tables are
-    corpus-derived DataFrames; nothing model-sized ever lives on the
-    driver, so the fit scales to any corpus."""
-
-    def __init__(
-        self,
-        probs: DataFrame,
-        contexts: DataFrame,
-        cont: DataFrame,
-        discount: float,
-        n_bigram_types: int,
-        _bg: DataFrame | None = None,
-    ):
-        self.probs = probs
-        self.contexts = contexts
-        self.cont = cont
-        self.discount = discount
-        self.n_bigram_types = n_bigram_types
-        # the checkpointed bigram-count table every model table derives
-        # from — the model's resident state, released by unpersist()
-        self._bg = _bg
-
-    def unpersist(self) -> None:
-        """Release the fitted model's checkpointed bigram table (its
-        only resident state).  The model's DataFrames re-derive from
-        lineage after this but every action re-runs the corpus
-        tokenize+count — call when done with the model, the same
-        lifecycle discipline as the iterative operators' checkpoints."""
-        if self._bg is not None:
-            self._bg.unpersist()
-
-    # -- fit -------------------------------------------------------------
-
-    @classmethod
-    def fit(
-        cls,
-        corpus: DataFrame,
-        text_col: str = "text",
-        discount: float = DEFAULT_DISCOUNT,
-    ) -> "BigramKN":
-        if not 0.0 < discount < 1.0:
-            # D outside (0,1) breaks the probability axioms: D≥1 can
-            # zero every observed term, D≤0 un-discounts and λ goes
-            # non-positive — fail at fit, not as NaN perplexities later
-            raise ValueError(f"KN discount must be in (0, 1), got {discount}")
-        bg = (
-            doc_bigrams(corpus, text_col)
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("c12"))
-            # every derived table (and every later score) re-reads
-            # this: checkpoint so the tokenize+pair+count subtree runs
-            # once.  The blocks are the MODEL's resident state —
-            # BigramKN.unpersist() releases them when the caller is
-            # done (a fit-scoped unpersist would silently re-run the
-            # corpus count on every score action)
-            .localCheckpoint(eager=True)
-        )
-        ctx = bg.groupBy("w1").agg(
-            F.sum("c12").alias("c1"),
-            F.count(F.lit(1)).alias("n1_fwd"),  # N1+(w1 ·)
-        )
-        n1_bwd = bg.groupBy("w2").agg(
-            F.count(F.lit(1)).alias("n1_bwd")  # N1+(· w2)
-        )
-        n_types = bg.count()  # N1+(· ·)
-        d = F.lit(float(discount))
-        cont = n1_bwd.select(
-            "w2", (F.col("n1_bwd") / F.lit(float(n_types))).alias("pcont")
-        )
-        contexts = ctx.select(
-            "w1",
-            (d * F.col("n1_fwd") / F.col("c1")).alias("lam"),
-            "c1",
-        )
-        probs = (
-            bg.join(contexts, "w1")
-            .join(cont, "w2")
-            .select(
-                "w1",
-                "w2",
-                (
-                    F.greatest(F.col("c12") - d, F.lit(0.0)) / F.col("c1")
-                    + F.col("lam") * F.col("pcont")
-                ).alias("p"),
-            )
-        )
-        return cls(probs, contexts.drop("c1"), cont, discount, n_types, _bg=bg)
-
-    # -- score -----------------------------------------------------------
-
-    def score(
-        self,
-        docs: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        p_floor: float = 1e-9,
-    ) -> DataFrame:
-        """(id_col, n_bigrams, avg_nll) — per-document mean negative
-        log-likelihood under the fitted model, the CCNet-style quality
-        signal (lower = more natural under the training corpus).
-
-        Backoff exactly as the formula dictates, via two LEFT joins:
-        observed bigram → full interpolated p; unseen bigram in a SEEN
-        context → λ(w1)·Pcont(w2); unseen context → Pcont(w2); a w2 the
-        model has never seen ANYWHERE has Pcont = 0 and floors at
-        ``p_floor`` (the standard OOV guard — log 0 would poison the
-        doc's score).  Docs with <2 tokens report n_bigrams=0 and NULL
-        avg_nll: no evidence is not the same as perfect fluency."""
-        bgs = doc_bigrams(docs, text_col, keep_cols=[id_col])
-        joined = (
-            bgs.join(self.probs, ["w1", "w2"], "left")
-            .join(self.contexts, "w1", "left")
-            .join(self.cont, "w2", "left")
-            .select(
-                id_col,
-                F.greatest(
-                    F.coalesce(
-                        F.col("p"),  # observed bigram
-                        F.col("lam") * F.col("pcont"),  # seen ctx backoff
-                        F.col("pcont"),  # unseen ctx: continuation only
-                    ),
-                    F.lit(float(p_floor)),  # fully-OOV floor
-                ).alias("_p"),
-            )
-        )
-        scored = joined.groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            (-F.sum(F.log("_p")) / F.count(F.lit(1))).alias("avg_nll"),
-        )
-        # <2-token docs emitted no bigram rows: restore them with NULL
-        # scores so the output covers every input document.  NULL-SAFE
-        # id join — the corpus-wide id convention (a NULL-id doc's
-        # score must reach its row, not vanish into an unmatched left
-        # side; groupBy above already grouped NULL ids together)
-        ids = docs.select(id_col).distinct()
-        return ids.join(
-            scored,
-            on=ids[id_col].eqNullSafe(scored[id_col]),
-            how="left",
-        ).select(
-            ids[id_col].alias(id_col),
-            F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
-            "avg_nll",
         )
 
 
@@ -939,7 +671,7 @@ def perplexity_buckets(
     published way perplexity becomes a DATASET PARTITION rather than a
     hard filter (train on head+middle, hold tail for ablation).
 
-    ``scored`` is a :meth:`NgramKN.score` /:meth:`BigramKN.score`
+    ``scored`` is a :meth:`NgramKN.score` / :meth:`NgramKN.score_broadcast`
     output joined back to its docs (or any frame with a score column);
     ``group_cols`` (e.g. ``["lang"]``) computes cuts independently per
     group, CCNet's per-language calibration — omit for global cuts.

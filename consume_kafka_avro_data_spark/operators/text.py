@@ -458,7 +458,6 @@ def bpe_train(
     n_merges: int = 50,
     min_pair_count: int = 2,
     checkpoint_every: int = 8,
-    merges_per_round: int = 1,
     stats: dict | None = None,
 ) -> list[tuple[str, str]]:
     """Learn a BPE merge table from a corpus (Sennrich 2016).  Returns
@@ -472,20 +471,17 @@ def bpe_train(
     pair's count drops below ``min_pair_count`` (merging hapax pairs
     memorizes the corpus instead of learning units).
 
-    ``merges_per_round`` batches Spark jobs, not semantics: each round
-    recounts once, then applies up to that many merges — restricted by
-    :func:`_safe_merge_batch` to the provably-sequential-identical
-    prefix — as chained fold expressions in ONE map pass.  The output
-    is pinned equal to ``merges_per_round=1`` (pytest); the win is the
-    driver round-trip count, the practical cap on vocab size (a 32k
-    production table at one job per merge ≈ 32k driver jobs).
+    Rounds batch Spark jobs, not semantics: each round recounts once,
+    then applies the whole provably-sequential-identical prefix
+    :func:`_safe_merge_batch` picks from the ranking (capped by the
+    remaining budget) as chained fold expressions in ONE map pass.  The
+    output is pinned equal to the one-merge-per-round reference
+    (pytest); the win is the driver round-trip count, the practical cap
+    on vocab size (a 32k production table at one job per merge ≈ 32k
+    driver jobs).
 
     ``stats``, when passed, receives ``{"rounds": <recount rounds>}``
     so benchmarks can report the job-count saving directly."""
-    if merges_per_round < 1:
-        raise ValueError(
-            f"merges_per_round must be >= 1, got {merges_per_round}"
-        )
     types = _bpe_word_types(corpus, text_col).localCheckpoint(eager=True)
     # the ROOT holding checkpoint blocks: intermediate (non-checkpoint)
     # rounds derive from it lazily, so unpersisting the immediate
@@ -498,7 +494,7 @@ def bpe_train(
     try:
         while len(merges) < n_merges:
             rounds += 1
-            want = min(merges_per_round, n_merges - len(merges))
+            want = n_merges - len(merges)
             s = F.col("syms")
             rows = (
                 types.where(F.size(s) > 1)

@@ -29,7 +29,6 @@ of the graph tables.
 
 from __future__ import annotations
 
-import inspect
 import json
 import os
 import time
@@ -115,7 +114,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         lm_model=None,
         lm_threshold: float | None = None,
         lm_rejects_dir: str | None = None,
-        lm_broadcast: bool | None = None,
         c4: bool = False,
         c4_min_line_words: int = 5,
         c4_min_sentences: int = 3,
@@ -129,7 +127,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         contam_dir: str | None = None,
         drift_monitor=None,
         sketch_monitor=None,
-        store_bloom: bool = False,
     ):
         """``id_type`` is the document-id column's Spark type (default
         LongType) — it shapes the persisted store schema, so a stream
@@ -178,52 +175,25 @@ class StreamingDedupIngest(BoundedReplayMixin):
         ``lm_model`` (+ required ``lm_threshold``) enables the
         PERPLEXITY gate at ingest — the CCNet deployment shape (Wenzek
         et al. 2020 filter web text by LM perplexity under a model fit
-        on trusted text): a fitted ``operators/lm`` model
-        (``NgramKN``/``BigramKN``, typically ``NgramKN.load``-ed once
-        at stream start) scores each batch and docs with
+        on trusted text): a fitted ``operators/lm.NgramKN``
+        (typically ``NgramKN.load``-ed once at stream start) scores
+        each batch and docs with
         ``avg_nll > lm_threshold`` are rejected before signing,
         counted into ``rejected_docs``, optionally persisted with
         their scores to ``lm_rejects_dir`` (same replay contract).
         Docs too short for the model's order (``n_ngrams=0``, NULL
         score) PASS — no evidence is not evidence of junk; pair with
-        the heuristic gate's length features to cut shorts.  Unlike
-        the two quality gates this one shuffles (the score is a
-        per-doc aggregate over joined n-grams), so it runs after
-        them, on their survivors only.
-
-        ``lm_broadcast`` controls how the LM gate's model reaches the
-        per-batch score:
-
-        * ``True`` — model tables hinted into the joins' build side
-          (``NgramKN.score(broadcast_model=True)``): the per-batch
-          score is MAP-ONLY up to the final per-doc aggregate — the
-          deployed CCNet shape, where the filter model is fit once on
-          a bounded (usually ``min_count``-pruned) trusted corpus and
-          then sweeps every arriving batch.
-        * ``"dict"`` (round 9) — the model is collected ONCE at
-          construction into plain dicts and shipped as a broadcast
-          variable; each batch scores inside one ``mapInPandas``
-          (``NgramKN.score_broadcast``) with ZERO model joins per
-          micro-batch.  Value-identical to the relational scorer
-          (pinned); requires a model small enough for
-          ``local_tables``'s row ceiling — the pruned deployed shape.
-          Round 10 ships the FLAT payload (``local_tables_flat`` —
-          int-interned keys + per-batch gram memo, the
-          measured-faster kernel); ``"dict-tuple"`` keeps the round-9
-          string-tuple layout, retained for the bench A/B.
-        * ``False`` — plain joins, sized by Catalyst.  Choose this
-          when the model was fit UNPRUNED on a corpus large enough
-          that its gram-type tables rival executor memory — otherwise
-          every micro-batch pays up to 2n−1 sort-merge shuffles
-          against the model tables, per batch, forever.
-        * ``None`` (default) = AUTO: ``True`` when the model's
-          ``score`` supports the hint (NgramKN) AND its
-          ``model_rows()`` fits under the dict-tier row ceiling —
-          the size check (r08 advisor) that keeps auto from forcing
-          an unpruned web-scale model's tables onto executor heaps;
-          oversize models resolve to ``False`` (degrade to sort-merge,
-          never OOM by default).  BigramKN's two-table score has no
-          hint and broadcasts by size like any small join.
+        the heuristic gate's length features to cut shorts.  The
+        scorer is chosen once at construction from the model's size
+        (``model_rows()``, counted once): a model within
+        ``MAX_LOCAL_MODEL_ROWS`` — the ``min_count``-pruned deployed
+        shape — is collected and broadcast ONCE, and each micro-batch
+        scores in one Arrow pass with zero model joins
+        (``NgramKN.score_broadcast``); a larger model stays on the
+        relational ``NgramKN.score`` (2n−1 joins per batch, but no
+        model-sized state on executor heaps).  Both are
+        value-identical (pinned).  The gate runs after the quality
+        gates, on their survivors only.
 
         ``c4=True`` enables the C4 LINE-LEVEL cleaning stage (Raffel
         et al. 2020 §2.2; ``operators/text.c4_clean``) as the FIRST
@@ -327,12 +297,18 @@ class StreamingDedupIngest(BoundedReplayMixin):
         self.quality_model = quality_model
         self.quality_model_threshold = quality_model_threshold
         self.model_rejects_dir = model_rejects_dir
+        self._lm_local = None  # Broadcast of the model's dict payload
         if lm_model is not None:
-            if not hasattr(lm_model, "score"):
+            from consume_kafka_avro_data_spark.operators.lm import (
+                MAX_LOCAL_MODEL_ROWS,
+                NgramKN,
+            )
+
+            if not isinstance(lm_model, NgramKN):
                 raise TypeError(
-                    "lm_model must be a fitted operators/lm model (has "
-                    ".score) — fit with NgramKN.fit or reopen with "
-                    "NgramKN.load"
+                    "lm_model must be a fitted operators/lm NgramKN (the "
+                    "gate calls its score / score_broadcast) — fit with "
+                    "NgramKN.fit or reopen with NgramKN.load"
                 )
             if lm_threshold is None:
                 # an LM gate with no threshold silently rejects nothing
@@ -341,59 +317,16 @@ class StreamingDedupIngest(BoundedReplayMixin):
                     "lm_model requires lm_threshold (the avg_nll cut; "
                     "calibrate on a held-out slice of the trusted corpus)"
                 )
+            # the scorer, chosen once from the model's size: a model
+            # within the ceiling is collected and broadcast here, and
+            # every micro-batch reuses that one broadcast variable
+            if lm_model.model_rows() <= MAX_LOCAL_MODEL_ROWS:
+                self._lm_local = spark.sparkContext.broadcast(
+                    lm_model._tables_payload()
+                )
         self.lm_model = lm_model
         self.lm_threshold = lm_threshold
         self.lm_rejects_dir = lm_rejects_dir
-        # resolve the broadcast mode EAGERLY (config-layer, not batch 0)
-        supports_hint = lm_model is not None and (
-            "broadcast_model"
-            in inspect.signature(lm_model.score).parameters
-        )
-        self._lm_local = None  # Broadcast[dict] when lm_broadcast="dict"
-        if lm_broadcast in ("dict", "dict-tuple"):
-            if lm_model is None or not hasattr(lm_model, "score_broadcast"):
-                raise ValueError(
-                    'lm_broadcast="dict" needs an lm_model with '
-                    "score_broadcast (NgramKN) — fit/load one, or use "
-                    "True/False/None for the relational scorer"
-                )
-            # collect ONCE here (local_tables enforces its row
-            # ceiling) and broadcast ONCE — every micro-batch reuses
-            # the same broadcast variable for the stream's whole life.
-            # "dict" ships the round-10 FLAT payload (int-interned +
-            # per-batch gram memo — the measured-faster kernel);
-            # "dict-tuple" keeps the round-9 string-tuple layout for
-            # the bench A/B.  score_broadcast dispatches on the
-            # payload, so the per-batch path below is layout-blind.
-            self._lm_local = spark.sparkContext.broadcast(
-                lm_model.local_tables_flat()
-                if lm_broadcast == "dict"
-                else lm_model.local_tables()
-            )
-            self.lm_broadcast: bool | str = "dict"
-        elif lm_broadcast is None:
-            # AUTO = hint on iff supported AND the model is actually
-            # broadcast-sized (one-time table counts; an unpruned
-            # web-scale fit degrades to sort-merge instead of OOMing
-            # executors by default — r08 advisor)
-            from consume_kafka_avro_data_spark.operators.lm import (
-                MAX_LOCAL_MODEL_ROWS,
-            )
-
-            self.lm_broadcast = bool(
-                supports_hint
-                and hasattr(lm_model, "model_rows")
-                and lm_model.model_rows() <= MAX_LOCAL_MODEL_ROWS
-            )
-        else:
-            if lm_broadcast and lm_model is not None and not supports_hint:
-                raise ValueError(
-                    "lm_broadcast=True but this lm_model's score() has no "
-                    "broadcast_model hint (BigramKN's two-table score "
-                    "broadcasts by size on its own) — drop the flag or use "
-                    "an NgramKN model"
-                )
-            self.lm_broadcast = bool(lm_broadcast)
         self.c4 = c4
         self.c4_min_line_words = c4_min_line_words
         self.c4_min_sentences = c4_min_sentences
@@ -504,29 +437,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         self._seen_batches: set[int] = set()
         self.drift_monitor = drift_monitor
         self.sketch_monitor = sketch_monitor
-        #: round-11 scale knob, from the census profile (the store
-        #: band-join probe is ~56% of the dedup stage, itself the
-        #: six-gate pipeline's wall-clock floor): build a bloom over
-        #: THIS BATCH's band keys (small side — docs × bands entries)
-        #: and prefilter the STORE's banded rows with it as a pure-JVM
-        #: bit test in the scan stage — the q_decontaminate_bloom
-        #: two-phase shape applied to the signature store.  Exact: a
-        #: bloom has no false negatives, all rows of one bucket share
-        #: one verdict (so surviving buckets' hot-counts stay exact),
-        #: and false-positive buckets can't equi-join any probe key.
-        #: What it buys at scale: the per-batch plan loses its two
-        #: FULL-STORE SHUFFLES (the hot-bucket aggregate and the band
-        #: join's store side both shrink to ~colliding buckets), so
-        #: per-batch cost tracks collisions instead of corpus size.
-        #: Default OFF, honestly: bench's ``store_bloom_ab`` row
-        #: measured the bloom arm SLOWER at bench scale (9.3 → 7.0
-        #: docs/s at 16-doc batches over a ≤ 500-row store — the
-        #: per-batch build job costs more than the tiny shuffles it
-        #: removes; the probe there is job-scheduling-bound, not
-        #: data-bound).  Enable it when the store dwarfs the batch —
-        #: the regime where the removed shuffles grow with the corpus
-        #: and the build job stays batch-sized.
-        self.store_bloom = store_bloom
 
     def _reset(self) -> None:
         # a monitor riding this ingest shares its run lifecycle: a new
@@ -678,29 +588,19 @@ class StreamingDedupIngest(BoundedReplayMixin):
 
     def _lm_scored(self, batch: DataFrame) -> DataFrame:
         """The LM gate's per-batch scoring frame — split out so tests
-        can pin its PLAN: with ``lm_broadcast`` resolved on (the NgramKN
-        auto default) every model-table join is a BroadcastHashJoin and
-        the batch side reaches the per-doc aggregate without an
-        Exchange — the map-only CCNet sweep shape, per micro-batch.
-        With ``"dict"`` the plan has ZERO model joins: the payload
-        collected at construction rides a broadcast variable into one
-        ``mapInPandas`` pass (pinned value-identical to the relational
-        scorer in tests/test_ngram_lm.py)."""
-        if self.lm_broadcast == "dict":
-            return self.lm_model.score_broadcast(
-                batch.select(self.id_col, self.text_col),
-                text_col=self.text_col,
-                id_col=self.id_col,
-                _local=self._lm_local,
+        can pin its PLAN: with the model broadcast at construction the
+        plan has ZERO model joins (one Arrow pass over the payload);
+        past the row ceiling it is the relational scorer's joins."""
+        docs = batch.select(self.id_col, self.text_col)
+        if self._lm_local is None:
+            return self.lm_model.score(
+                docs, text_col=self.text_col, id_col=self.id_col
             )
-        kwargs = (
-            {"broadcast_model": True} if self.lm_broadcast else {}
-        )
-        return self.lm_model.score(
-            batch.select(self.id_col, self.text_col),
+        return self.lm_model.score_broadcast(
+            docs,
             text_col=self.text_col,
             id_col=self.id_col,
-            **kwargs,
+            _local=self._lm_local,
         )
 
     # -- per-micro-batch body ------------------------------------------------
@@ -944,19 +844,9 @@ class StreamingDedupIngest(BoundedReplayMixin):
             # survivors; avg_nll NULL (doc shorter than the model
             # order) never exceeds the threshold, so shorts pass
             scored_lm = self._lm_scored(batch)
-            # evidence-count column name differs per model generation
-            # (NgramKN: n_ngrams; BigramKN: n_bigrams) — normalize so
-            # the audit trail has ONE schema either way
-            count_col = (
-                "n_ngrams" if "n_ngrams" in scored_lm.columns else "n_bigrams"
-            )
             lm_rejects = (
                 scored_lm.where(F.col("avg_nll") > self.lm_threshold)
-                .select(
-                    self.id_col,
-                    F.col(count_col).alias("n_ngrams"),
-                    "avg_nll",
-                )
+                .select(self.id_col, "n_ngrams", "avg_nll")
                 .localCheckpoint(eager=True)  # dir write + count + anti-join
             )
             if self.lm_rejects_dir:
@@ -1060,28 +950,7 @@ class StreamingDedupIngest(BoundedReplayMixin):
                 how="left_anti",
             )
             n_docs = sigs.count()  # checkpointed; shared with metrics
-            store_banded = self._banded(store_rows)
-            if self.store_bloom:
-                from consume_kafka_avro_data_spark.operators.bloom import (
-                    MAX_BITS,
-                    BroadcastBloom,
-                )
-
-                # sized from the batch's band-key count (docs × bands,
-                # the build side); a batch too large for plan-literal
-                # transport falls back to the unfiltered join rather
-                # than refuse the micro-batch
-                n_keys = n_docs * self.bands
-                if 0 < n_keys * 16 <= MAX_BITS:
-                    blk_bloom = BroadcastBloom.build(
-                        banded.select("_block"),
-                        "_block",
-                        n_bits=max(128, 16 * n_keys),
-                    )
-                    store_banded = store_banded.where(
-                        blk_bloom.might_contain("_block")
-                    )
-            vs_store = self._matches(banded, store_banded)
+            vs_store = self._matches(banded, self._banded(store_rows))
             # intra-batch canonical rule: a doc whose id is ALREADY
             # STORED is canonical regardless of id order (the exclusion
             # above removed its store copy from the probe target, so a

@@ -3,7 +3,9 @@ distributed fit must reproduce an independent pure-Python
 implementation's bucket counts (exact integers) and per-document
 log-weights (1e-9), the weigher must be map-only (Exchange-free plan),
 Gumbel top-k selection must be reproducible and layout-independent,
-and the selected sample must tilt toward the target distribution."""
+and the selected sample must tilt toward the target distribution.  Both
+bucket families are pinned against the reference: md5 (Arrow tier) and
+xxhash64 (JVM tier, against the pure-Python XXH64 port below)."""
 
 from __future__ import annotations
 
@@ -42,31 +44,100 @@ RAW = [
 
 TOKEN_RE = re.compile(r"[a-z0-9']+")
 
+_XXH_P1 = 0x9E3779B185EBCA87
+_XXH_P2 = 0xC2B2AE3D27D4EB4F
+_XXH_P3 = 0x165667B19E3779F9
+_XXH_P4 = 0x85EBCA77C2B2AE63
+_XXH_P5 = 0x27D4EB2F165667C5
+_U64 = (1 << 64) - 1
 
-def _ref_bucket(ngram: str, buckets: int) -> int:
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _U64
+
+
+def _xxh64(data: bytes, seed: int = 42) -> int:
+    """Pure-Python XXH64 (Collet's public xxHash spec, 64-bit variant)
+    — the reference twin of Spark's ``xxhash64`` expression, which
+    hashes a string column's UTF-8 bytes with seed 42.  Returns the
+    SIGNED value Spark returns (two's complement of the spec's
+    unsigned digest), so ``% buckets`` agrees with Spark's ``pmod``
+    bucket math exactly."""
+    n = len(data)
+    i = 0
+    if n >= 32:
+        v1 = (seed + _XXH_P1 + _XXH_P2) & _U64
+        v2 = (seed + _XXH_P2) & _U64
+        v3 = seed & _U64
+        v4 = (seed - _XXH_P1) & _U64
+
+        def _round(acc: int, lane: int) -> int:
+            acc = (acc + lane * _XXH_P2) & _U64
+            return (_rotl(acc, 31) * _XXH_P1) & _U64
+
+        while i + 32 <= n:
+            v1 = _round(v1, int.from_bytes(data[i : i + 8], "little"))
+            v2 = _round(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
+            v3 = _round(v3, int.from_bytes(data[i + 16 : i + 24], "little"))
+            v4 = _round(v4, int.from_bytes(data[i + 24 : i + 32], "little"))
+            i += 32
+        h = (
+            _rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)
+        ) & _U64
+        for v in (v1, v2, v3, v4):
+            h ^= _round(0, v)
+            h = (h * _XXH_P1 + _XXH_P4) & _U64
+    else:
+        h = (seed + _XXH_P5) & _U64
+    h = (h + n) & _U64
+    while i + 8 <= n:
+        k = int.from_bytes(data[i : i + 8], "little")
+        k = (_rotl((k * _XXH_P2) & _U64, 31) * _XXH_P1) & _U64
+        h ^= k
+        h = (_rotl(h, 27) * _XXH_P1 + _XXH_P4) & _U64
+        i += 8
+    if i + 4 <= n:
+        h ^= (int.from_bytes(data[i : i + 4], "little") * _XXH_P1) & _U64
+        h = (_rotl(h, 23) * _XXH_P2 + _XXH_P3) & _U64
+        i += 4
+    while i < n:
+        h ^= (data[i] * _XXH_P5) & _U64
+        h = (_rotl(h, 11) * _XXH_P1) & _U64
+        i += 1
+    h ^= h >> 33
+    h = (h * _XXH_P2) & _U64
+    h ^= h >> 29
+    h = (h * _XXH_P3) & _U64
+    h ^= h >> 32
+    return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def _ref_bucket(ngram: str, buckets: int, hash_fn: str = "md5") -> int:
+    if hash_fn == "xxhash64":
+        return _xxh64(ngram.encode("utf-8")) % buckets  # == Spark pmod
     return (
         int.from_bytes(hashlib.md5(ngram.encode()).digest()[:8], "big") % buckets
     )
 
 
-def _ref_doc_buckets(text: str, buckets: int) -> list[int]:
+def _ref_doc_buckets(text: str, buckets: int, hash_fn: str = "md5") -> list[int]:
     toks = TOKEN_RE.findall((text or "").lower())
-    out = [_ref_bucket(t, buckets) for t in toks]
+    out = [_ref_bucket(t, buckets, hash_fn) for t in toks]
     out += [
-        _ref_bucket(toks[i] + " " + toks[i + 1], buckets)
+        _ref_bucket(toks[i] + " " + toks[i + 1], buckets, hash_fn)
         for i in range(len(toks) - 1)
     ]
     return out
 
 
-def _ref_counts(texts, buckets):
+def _ref_counts(texts, buckets, hash_fn="md5"):
     c = Counter()
     for t in texts:
-        c.update(_ref_doc_buckets(t, buckets))
+        c.update(_ref_doc_buckets(t, buckets, hash_fn))
     return c
 
 
-def _ref_log_ratio(target, raw, buckets, smoothing=1.0):
+def _ref_log_ratio(target, raw, buckets, smoothing=1.0, hash_fn="md5"):
     def logp(counts):
         total = sum(counts.values())
         denom = math.log(total + smoothing * buckets)
@@ -75,13 +146,13 @@ def _ref_log_ratio(target, raw, buckets, smoothing=1.0):
             for b in range(buckets)
         ]
 
-    lt = logp(_ref_counts(target, buckets))
-    lr = logp(_ref_counts(raw, buckets))
+    lt = logp(_ref_counts(target, buckets, hash_fn))
+    lr = logp(_ref_counts(raw, buckets, hash_fn))
     return [a - b for a, b in zip(lt, lr)]
 
 
-def _ref_logw(text, ratio, buckets):
-    return sum(ratio[b] for b in _ref_doc_buckets(text, buckets))
+def _ref_logw(text, ratio, buckets, hash_fn="md5"):
+    return sum(ratio[b] for b in _ref_doc_buckets(text, buckets, hash_fn))
 
 
 @pytest.fixture(scope="module")
@@ -210,20 +281,19 @@ def test_invalid_inputs_raise_eagerly(spark, frames):
     model = DsirModel(log_ratio=(0.0,) * B, buckets=B, smoothing=1.0)
     with pytest.raises(ValueError, match="k must be"):
         dsir_resample(model, raw, k=0)
-    # buckets >= 2^31 would silently diverge between the exact-big-int
-    # Python tier and the long-residue/int-column JVM tier (r08
-    # advisor) — rejected at EVERY entry point, both engines
+    # buckets >= 2^31 overflow the int bucket columns — rejected at
+    # EVERY entry point, both families
     from consume_kafka_avro_data_spark.operators.dsir import (
         dsir_bucket_expr,
         hashed_ngram_counts,
     )
     from pyspark.sql import functions as F
 
-    for eng in ("pandas", "jvm"):
+    for hf in ("md5", "xxhash64"):
         with pytest.raises(ValueError, match="2\\*\\*31"):
-            dsir_fit(target, raw, buckets=1 << 31, engine=eng)
+            dsir_fit(target, raw, buckets=1 << 31, hash_fn=hf)
         with pytest.raises(ValueError, match="2\\*\\*31"):
-            hashed_ngram_counts(raw, buckets=(1 << 31) + 7, engine=eng)
+            hashed_ngram_counts(raw, buckets=(1 << 31) + 7, hash_fn=hf)
     with pytest.raises(ValueError, match="2\\*\\*31"):
         dsir_bucket_expr(F.lit("x"), 1 << 31)
     # the largest legal value is accepted (bound is strict)
@@ -289,67 +359,18 @@ def test_ess_diagnostic(spark, frames):
     assert dsir_ess(flat, empty) == {"ess": 0.0, "n": 0, "ess_fraction": 0.0}
 
 
-# -- round 8: the JVM featurizer tier ---------------------------------------
-
-
-def test_jvm_bucket_counts_identical_to_pandas_tier(spark):
-    """The codegen'd bucket function (md5 → unsigned-64 conv → pmod)
-    is THE SAME function as the Python tier's: exact integer-count
-    equality over text with unicode, apostrophes, digits, NULLs, and
-    empties — so models fit on either tier are interchangeable."""
-    texts = [
-        "the theory of distributed computation",
-        "don't count unicode like café or 北京 as word chars",
-        "digits 42 and 7th mix in fine",
-        "",
-        None,
-        "repeat repeat repeat repeat",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    want = {
-        r["bucket"]: r["cnt"]
-        for r in hashed_ngram_counts(df, buckets=B).collect()
-    }
-    got = {
-        r["bucket"]: r["cnt"]
-        for r in hashed_ngram_counts(
-            df.repartition(3), buckets=B, engine="jvm"
-        ).collect()
-    }
-    assert got == want
-
-
-def test_jvm_fit_and_weights_match_pandas_tier(spark, frames):
-    """fit(engine='jvm') returns the EXACT model (integer counts →
-    identical driver math), and the all-expression weigher agrees with
-    the Arrow tier to 1e-9 on every document — same gram order, no
-    Python workers."""
-    target, raw = frames
-    m_pd = dsir_fit(target, raw, buckets=B)
-    m_jvm = dsir_fit(target, raw, buckets=B, engine="jvm")
-    assert m_jvm == m_pd  # frozen dataclass: exact tuple equality
-    w_pd = {
-        r["doc_id"]: r["dsir_logw"]
-        for r in dsir_log_weights(m_pd, raw).collect()
-    }
-    w_jvm = {
-        r["doc_id"]: r["dsir_logw"]
-        for r in dsir_log_weights(m_jvm, raw, engine="jvm").collect()
-    }
-    assert set(w_jvm) == set(w_pd)
-    for i, v in w_pd.items():
-        assert w_jvm[i] == pytest.approx(v, abs=1e-9)
+# -- the xxhash64 family: the JVM tier ---------------------------------------
 
 
 def test_jvm_weigher_is_map_only_and_python_free(spark, frames):
-    """The JVM weigher's plan: no SHUFFLE exchange (the only exchange
-    is the single-row ratio frame's broadcast) and no Python
-    evaluation node — the fold is pure codegen and the 100 TB sweep
-    never starts an Arrow worker."""
+    """An xxhash64 model weighs in the JVM tier: no SHUFFLE exchange
+    (the only exchange is the single-row ratio frame's broadcast) and
+    no Python evaluation node — the fold is pure codegen and the
+    100 TB sweep never starts an Arrow worker."""
     target, raw = frames
-    model = dsir_fit(target, raw, buckets=B)
+    model = dsir_fit(target, raw, buckets=B, hash_fn="xxhash64")
     plan = (
-        dsir_log_weights(model, raw, engine="jvm")
+        dsir_log_weights(model, raw)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -358,23 +379,11 @@ def test_jvm_weigher_is_map_only_and_python_free(spark, frames):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_engine_validated(spark, frames):
-    target, raw = frames
-    model = dsir_fit(target, raw, buckets=B)
-    with pytest.raises(ValueError, match="engine"):
-        dsir_log_weights(model, raw, engine="numpy")
-    with pytest.raises(ValueError, match="engine"):
-        hashed_ngram_counts(raw, engine="numpy")
-
-
 def test_xxh64_port_matches_spark_xxhash64(spark):
-    """The in-package XXH64 port (Collet's public spec) must agree
-    with Spark's seed-42 xxhash64 expression on UTF-8 bytes — empty,
-    short (<32B), exact block multiples, long (>32B), and unicode —
-    which is what makes the xxhash64 bucket family's two engines one
-    function."""
-    from consume_kafka_avro_data_spark.operators.dsir import _xxh64
-
+    """The reference XXH64 port (Collet's public spec) must agree with
+    Spark's seed-42 xxhash64 expression on UTF-8 bytes — empty, short
+    (<32B), exact block multiples, long (>32B), and unicode — which is
+    what lets it pin the JVM tier below."""
     texts = [
         "",
         "a",
@@ -396,51 +405,42 @@ def test_xxh64_port_matches_spark_xxhash64(spark):
 
 
 def test_xxhash64_family_counts_fit_and_weights_agree(spark, frames):
-    """The xxhash64 family: jvm and pandas engines produce identical
-    histograms and the identical model; weights agree to 1e-9; the
-    recorded hash_fn survives save/load; scoring always follows the
-    MODEL's family (an xxhash64 model scored through either engine
-    gives the same weights)."""
+    """The xxhash64 family's JVM tier against the reference: exact
+    histogram counts over text with unicode, apostrophes, digits,
+    NULLs and empties; the log ratio to 1e-9; every document's weight
+    to 1e-9.  The two families genuinely differ (different bucket
+    functions)."""
     target, raw = frames
-    want = {
-        r["bucket"]: r["cnt"]
-        for r in hashed_ngram_counts(
-            raw, buckets=B, hash_fn="xxhash64"
-        ).collect()
-    }
+    texts = RAW + [
+        "don't count unicode like café or 北京 as word chars",
+        "digits 42 and 7th mix in fine",
+        "",
+        None,
+        "repeat repeat repeat repeat",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
     got = {
         r["bucket"]: r["cnt"]
         for r in hashed_ngram_counts(
-            raw.repartition(3), buckets=B, engine="jvm", hash_fn="xxhash64"
+            df.repartition(3), buckets=B, hash_fn="xxhash64"
         ).collect()
     }
-    assert got == want
-    m_pd = dsir_fit(target, raw, buckets=B, hash_fn="xxhash64")
-    m_jvm = dsir_fit(
-        target, raw, buckets=B, engine="jvm", hash_fn="xxhash64"
-    )
-    assert m_jvm == m_pd
-    assert m_jvm.hash_fn == "xxhash64"
-    w_pd = {
-        r["doc_id"]: r["dsir_logw"]
-        for r in dsir_log_weights(m_pd, raw).collect()
-    }
-    w_jvm = {
-        r["doc_id"]: r["dsir_logw"]
-        for r in dsir_log_weights(m_jvm, raw, engine="jvm").collect()
-    }
-    for i, v in w_pd.items():
-        assert w_jvm[i] == pytest.approx(v, abs=1e-9)
-    # the two families genuinely differ (different bucket functions)
+    assert got == dict(_ref_counts(texts, B, "xxhash64"))
+    m = dsir_fit(target, raw, buckets=B, hash_fn="xxhash64")
+    assert m.hash_fn == "xxhash64"
+    ratio = _ref_log_ratio(TARGET, RAW, B, hash_fn="xxhash64")
+    assert list(m.log_ratio) == pytest.approx(ratio, abs=1e-9)
+    for r in dsir_log_weights(m, raw).collect():
+        assert r["dsir_logw"] == pytest.approx(
+            _ref_logw(r["text"], ratio, B, "xxhash64"), abs=1e-9
+        )
     m_md5 = dsir_fit(target, raw, buckets=B)
-    assert m_md5.hash_fn == "md5" and m_md5.log_ratio != m_jvm.log_ratio
+    assert m_md5.hash_fn == "md5" and m_md5.log_ratio != m.log_ratio
 
 
 def test_xxhash64_model_save_load_round_trip(spark, frames, tmp_path):
-    from consume_kafka_avro_data_spark.operators.dsir import DsirModel
-
     target, raw = frames
-    m = dsir_fit(target, raw, buckets=B, hash_fn="xxhash64", engine="jvm")
+    m = dsir_fit(target, raw, buckets=B, hash_fn="xxhash64")
     m.save(spark, str(tmp_path / "m.json"))
     back = DsirModel.load(spark, str(tmp_path / "m.json"))
     assert back == m and back.hash_fn == "xxhash64"
@@ -453,20 +453,27 @@ def test_hash_fn_validated(spark, frames):
 
 
 def test_resample_and_ess_accept_jvm_engine(spark, frames):
-    """engine='jvm' threads through selection and the ESS diagnostic:
-    identical selected set (weights agree to 1e-9 and Gumbel keys are
-    engine-independent) and matching ESS."""
+    """An xxhash64 model threads the JVM tier through selection and
+    the ESS diagnostic: the selected set is the Gumbel top-k over the
+    reference weights, and ESS matches the reference recompute."""
     target, raw = frames
-    m = dsir_fit(target, raw, buckets=B)
-    a = {r["doc_id"] for r in dsir_resample(m, raw, k=3, seed=7).collect()}
-    b = {
-        r["doc_id"]
-        for r in dsir_resample(m, raw, k=3, seed=7, engine="jvm").collect()
-    }
-    assert a == b
+    m = dsir_fit(target, raw, buckets=B, hash_fn="xxhash64")
+    ratio = _ref_log_ratio(TARGET, RAW, B, hash_fn="xxhash64")
+    logw = [_ref_logw(t, ratio, B, "xxhash64") for t in RAW]
+    seed = 7
+    g_rows = (
+        raw.select("doc_id", gumbel_key_expr("doc_id", "doc_id", seed).alias("g"))
+        .withColumn("g", F.col("g") - F.col("doc_id"))  # strip the fake logw
+        .collect()
+    )
+    keys = {r["doc_id"]: logw[r["doc_id"]] + r["g"] for r in g_rows}
+    want = set(sorted(keys, key=keys.get, reverse=True)[:3])
+    got = {r["doc_id"] for r in dsir_resample(m, raw, k=3, seed=seed).collect()}
+    assert got == want
     from consume_kafka_avro_data_spark.operators.dsir import dsir_ess
 
-    e_pd = dsir_ess(m, raw)
-    e_jvm = dsir_ess(m, raw, engine="jvm")
-    assert e_jvm["n"] == e_pd["n"]
-    assert e_jvm["ess"] == pytest.approx(e_pd["ess"], rel=1e-9)
+    mx = max(logw)
+    w = [math.exp(x - mx) for x in logw]
+    e = dsir_ess(m, raw)
+    assert e["n"] == len(RAW)
+    assert e["ess"] == pytest.approx(sum(w) ** 2 / sum(x * x for x in w), rel=1e-9)

@@ -1,8 +1,9 @@
-"""Interpolated Kneser-Ney bigram LM (operators/lm): the Spark fit
-must reproduce a pure-Python implementation of the published formulas
-value-for-value, satisfy the signature KN invariant
-(Σ_w2 P(w2|w1) = 1 per seen context), back off exactly per the
-formula at score time, and score the documents table end to end."""
+"""Interpolated Kneser-Ney at the bigram order (operators/lm,
+``NgramKN(order=2)``): the Spark fit must reproduce a pure-Python
+implementation of the published bigram formulas value-for-value,
+satisfy the signature KN invariant (Σ_w2 P(w2|w1) = 1 per seen
+context), back off exactly per the formula at score time, and score
+the documents table end to end."""
 
 from __future__ import annotations
 
@@ -12,10 +13,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from consume_kafka_avro_data_spark.operators.lm import (
-    BigramKN,
-    doc_bigrams,
-)
+from consume_kafka_avro_data_spark.operators.lm import NgramKN, doc_ngrams
 
 CORPUS = [
     "the cat sat on the mat",
@@ -62,7 +60,9 @@ def corpus_df(spark):
 
 @pytest.fixture(scope="module")
 def model(corpus_df):
-    return BigramKN.fit(corpus_df)
+    m = NgramKN.fit(corpus_df, order=2)
+    yield m
+    m.unpersist()
 
 
 def test_fit_matches_reference_formulas(model, corpus_df):
@@ -70,16 +70,15 @@ def test_fit_matches_reference_formulas(model, corpus_df):
     λ, and every continuation probability must equal the reference
     implementation's (same integer counts, same divisions)."""
     p_ref, bg, c1, pcont, lam, n_types = _ref_kn(CORPUS)
-    assert model.n_bigram_types == n_types
     got_p = {
-        (r.w1, r.w2): r.p for r in model.probs.collect()
+        (r.w1, r.w2): r.p for r in model.probs[2].collect()
     }
-    assert set(got_p) == set(bg)
+    assert set(got_p) == set(bg) and len(got_p) == n_types
     for key, got in got_p.items():
         assert got == pytest.approx(p_ref(*key), abs=1e-15), key
-    got_lam = {r.w1: r.lam for r in model.contexts.collect()}
+    got_lam = {r.w1: r.lam for r in model.lams[2].collect()}
     assert got_lam == pytest.approx(lam)
-    got_cont = {r.w2: r.pcont for r in model.cont.collect()}
+    got_cont = {r.w1: r.p1 for r in model.p1.collect()}
     assert got_cont == pytest.approx(pcont)
 
 
@@ -89,17 +88,17 @@ def test_kn_distribution_sums_to_one_per_context(model):
     vocabulary) is exactly 1 — discount taken equals discount
     redistributed."""
     obs = (
-        model.probs.groupBy("w1").agg(F.sum("p").alias("p_obs")).collect()
+        model.probs[2].groupBy("w1").agg(F.sum("p").alias("p_obs")).collect()
     )
-    lam = {r.w1: r.lam for r in model.contexts.collect()}
-    cont_rows = model.cont.collect()
-    cont_total = sum(r.pcont for r in cont_rows)
+    lam = {r.w1: r.lam for r in model.lams[2].collect()}
+    cont_rows = model.p1.collect()
+    cont_total = sum(r.p1 for r in cont_rows)
     assert cont_total == pytest.approx(1.0)  # Pcont is a distribution
     # Σ_w2∈vocab P(w2|w1) = Σ_observed p + λ·Σ_{unseen w2} pcont
     seen_w2 = {
-        (r.w1, r.w2) for r in model.probs.select("w1", "w2").collect()
+        (r.w1, r.w2) for r in model.probs[2].select("w1", "w2").collect()
     }
-    pcont = {r.w2: r.pcont for r in cont_rows}
+    pcont = {r.w1: r.p1 for r in cont_rows}
     for r in obs:
         unseen_mass = sum(
             pc for w2, pc in pcont.items() if (r.w1, w2) not in seen_w2
@@ -129,8 +128,8 @@ def test_score_backoff_tiers(spark, model):
     assert got[2].avg_nll == pytest.approx(-math.log(p_ref("cat", "rug")))
     assert got[3].avg_nll == pytest.approx(-math.log(p_ref("zzz", "cat")))
     assert got[4].avg_nll == pytest.approx(-math.log(floor))
-    assert got[5].n_bigrams == 0 and got[5].avg_nll is None
-    assert all(got[i].n_bigrams == 1 for i in (1, 2, 3, 4))
+    assert got[5].n_ngrams == 0 and got[5].avg_nll is None
+    assert all(got[i].n_ngrams == 1 for i in (1, 2, 3, 4))
 
 
 def test_natural_text_scores_below_shuffled(spark, corpus_df, model):
@@ -147,15 +146,15 @@ def test_natural_text_scores_below_shuffled(spark, corpus_df, model):
 
 def test_fit_validates_discount(corpus_df):
     with pytest.raises(ValueError, match="discount"):
-        BigramKN.fit(corpus_df, discount=1.0)
+        NgramKN.fit(corpus_df, order=2, discount=1.0)
     with pytest.raises(ValueError, match="discount"):
-        BigramKN.fit(corpus_df, discount=0.0)
+        NgramKN.fit(corpus_df, order=2, discount=0.0)
 
 
 def test_doc_bigrams_is_shuffle_free(spark, corpus_df):
-    """The doc→bigram expansion must stay map-only (zip_with over
-    adjacent slices — no window, no Exchange)."""
-    bgs = doc_bigrams(corpus_df)
+    """The doc→bigram expansion must stay map-only (zipped adjacent
+    slices — no window, no Exchange)."""
+    bgs = doc_ngrams(corpus_df, 2)
     plan = bgs._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         bgs._jdf.queryExecution(), "simple"
     )
@@ -164,7 +163,7 @@ def test_doc_bigrams_is_shuffle_free(spark, corpus_df):
     docs = spark.createDataFrame(
         [(None,), ("",), ("a b",)], "text string"
     )
-    assert doc_bigrams(docs).count() == 1
+    assert doc_ngrams(docs, 2).count() == 1
 
 
 def test_score_on_documents_table(spark, sf_dir):
@@ -176,33 +175,34 @@ def test_score_on_documents_table(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     train = docs.where(F.col("doc_id") % 2 == 0)
     held = docs.where(F.col("doc_id") % 2 == 1)
-    lm = BigramKN.fit(train)
+    lm = NgramKN.fit(train, order=2)
     out = lm.score(held)
     assert out.count() == held.count()
     bad = out.where(
-        (F.col("n_bigrams") > 0)
+        (F.col("n_ngrams") > 0)
         & (F.col("avg_nll").isNull() | (F.col("avg_nll") <= 0))
     )
     assert bad.count() == 0
+    lm.unpersist()
 
 
 def test_null_id_doc_keeps_its_score(spark, model):
     """The corpus-wide NULL-id convention: a NULL-id doc's bigrams are
     grouped together and its score reaches its output row (a plain
-    equality restore-join would orphan it to n_bigrams=0)."""
+    equality restore-join would orphan it to n_ngrams=0)."""
     docs = spark.createDataFrame(
         [(None, "the cat"), (7, "the cat")], "doc_id long, text string"
     )
     rows = {r.doc_id: r for r in model.score(docs).collect()}
-    assert rows[None].n_bigrams == 1
+    assert rows[None].n_ngrams == 1
     assert rows[None].avg_nll == pytest.approx(rows[7].avg_nll)
 
 
 def test_unpersist_releases_model_state(corpus_df):
-    """The fitted model's only resident state is the checkpointed
-    bigram table; unpersist() releases it and the tables still answer
+    """The fitted model's resident state is its checkpointed count
+    tables; unpersist() releases them and the tables still answer
     (re-derived from lineage)."""
-    m = BigramKN.fit(corpus_df)
-    n = m.probs.count()
+    m = NgramKN.fit(corpus_df, order=2)
+    n = m.probs[2].count()
     m.unpersist()
-    assert m.probs.count() == n  # lazily re-derivable, just uncached
+    assert m.probs[2].count() == n  # lazily re-derivable, just uncached

@@ -1,9 +1,9 @@
 """Order-n interpolated Kneser-Ney (operators/lm.NgramKN): the Spark
 fit must reproduce a pure-Python implementation of the Chen & Goodman
 recursion value-for-value at every order, satisfy the per-context
-Σ_w P_k(w|ctx) = 1 mass law at EVERY backoff tier, reproduce BigramKN
-exactly at order 2, back off per the formula at score time, and score
-the documents table end to end."""
+Σ_w P_k(w|ctx) = 1 mass law at EVERY backoff tier, back off per the
+formula at score time, score the documents table end to end, and the
+broadcast-dict scorer must equal the relational one."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from consume_kafka_avro_data_spark.operators.lm import (
-    BigramKN,
     NgramKN,
     doc_ngrams,
 )
@@ -125,37 +124,6 @@ def test_mass_law_at_every_tier(tri):
         for ctx in denom[k]:
             total = sum(phat(ctx + (w,)) for w in vocab)
             assert total == pytest.approx(1.0, abs=1e-12), (k, ctx)
-
-
-def test_order2_reproduces_bigram_model(corpus_df):
-    """NgramKN(order=2) must equal BigramKN value-for-value — same
-    prob table, same λ, same continuation distribution, same doc
-    scores (the generalization is a strict superset)."""
-    big = BigramKN.fit(corpus_df)
-    gen = NgramKN.fit(corpus_df, order=2)
-    try:
-        want = {(r.w1, r.w2): r.p for r in big.probs.collect()}
-        got = {(r.w1, r.w2): r.p for r in gen.probs[2].collect()}
-        assert got == pytest.approx(want, abs=1e-15)
-        want_lam = {r.w1: r.lam for r in big.contexts.collect()}
-        got_lam = {r.w1: r.lam for r in gen.lams[2].collect()}
-        assert got_lam == pytest.approx(want_lam)
-        spark = corpus_df.sparkSession
-        docs = spark.createDataFrame(
-            [(1, "the cat sat"), (2, "zzz qqq"), (3, "solo")],
-            "doc_id long, text string",
-        )
-        want_s = {r.doc_id: r for r in big.score(docs).collect()}
-        got_s = {r.doc_id: r for r in gen.score(docs).collect()}
-        for i in (1, 2, 3):
-            assert got_s[i].n_ngrams == want_s[i].n_bigrams, i
-            if want_s[i].avg_nll is None:
-                assert got_s[i].avg_nll is None
-            else:
-                assert got_s[i].avg_nll == pytest.approx(want_s[i].avg_nll)
-    finally:
-        big.unpersist()
-        gen.unpersist()
 
 
 def test_score_backoff_tiers(spark, tri):
@@ -460,13 +428,10 @@ def texts_lower(texts):
 def test_broadcast_model_scoring_is_mapside_and_identical(
     spark, tri, tmp_path
 ):
-    """score(broadcast_model=True) must produce the identical frame
-    with every model join a broadcast-hash join, so the corpus-sized
-    gram table never shuffles before the final per-doc aggregate — the
-    map-only petabyte-sweep shape.  Asserted on the DEPLOYED form (a
-    save/load-ed model: its tables are parquet scans) — a freshly-fit
-    model's tables re-derive their fit lineage in-plan, whose internal
-    vocab-bounded joins may legitimately sort-merge."""
+    """The DEPLOYED form (a save/load-ed model: its tables are parquet
+    scans) scored through the broadcast dict: the identical frame to
+    the fitted model's relational score, from a plan with no model
+    join — the map-only petabyte-sweep shape."""
     docs = spark.createDataFrame(
         [(1, "the cat sat on the mat"), (2, "zzz qqq xxx"), (3, "hi")],
         "doc_id long, text string",
@@ -474,16 +439,13 @@ def test_broadcast_model_scoring_is_mapside_and_identical(
     want = {r.doc_id: (r.n_ngrams, r.avg_nll) for r in tri.score(docs).collect()}
     tri.save(str(tmp_path / "m"))
     loaded = NgramKN.load(spark, str(tmp_path / "m"))
-    fast = loaded.score(docs, broadcast_model=True)
+    fast = loaded.score_broadcast(docs)
     got = {r.doc_id: (r.n_ngrams, r.avg_nll) for r in fast.collect()}
-    assert got == want
+    _assert_scores_equal(got, want)
     plan = fast._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         fast._jdf.queryExecution(), "simple"
     )
-    # all 2n−1 = 5 model joins broadcast; the only sort-merge allowed
-    # is the final doc-sized id-restore join (both sides doc-keyed)
-    assert plan.count("BroadcastHashJoin") >= 5, plan
-    assert plan.count("SortMergeJoin") <= 1, plan
+    assert "Join" not in plan, plan
 
 
 def test_order5_matches_reference(spark):
@@ -641,6 +603,30 @@ def test_score_broadcast_identical_to_relational(spark, tri):
     _assert_scores_equal(_score_map(fast), want)
 
 
+def test_score_broadcast_identical_at_order_2(spark, corpus_df):
+    """The bigram edge of the cascade (one prob/λ tier over the
+    continuation unigram): score_broadcast == score on the toy corpus
+    for an observed bigram, both backoff tiers, a fully-OOV doc and a
+    one-token doc."""
+    docs = spark.createDataFrame(
+        [
+            (1, "the cat sat on the mat"),
+            (2, "cat rug"),
+            (3, "zzz cat"),
+            (4, "zzz qqq"),
+            (5, "solo"),
+        ],
+        "doc_id long, text string",
+    )
+    m = NgramKN.fit(corpus_df, order=2)
+    try:
+        _assert_scores_equal(
+            _score_map(m.score_broadcast(docs)), _score_map(m.score(docs))
+        )
+    finally:
+        m.unpersist()
+
+
 def test_score_broadcast_plan_has_zero_joins(spark, tri):
     """The tier's whole point: the model rides as a broadcast
     VARIABLE, so the scoring plan has NO joins at all — one Arrow
@@ -720,6 +706,10 @@ def test_local_tables_guard_and_reuse(spark, tri):
     _assert_scores_equal(
         _score_map(tri.score_broadcast(docs, _local=local)), want
     )
+    # and through a pre-broadcast payload (the streaming shape)
+    bc = spark.sparkContext.broadcast(local)
+    _assert_scores_equal(_score_map(tri.score_broadcast(docs, _local=bc)), want)
+    bc.unpersist()
     # a stale/mismatched payload is rejected eagerly
     local_bad = dict(local, order=4)
     with pytest.raises(ValueError, match="order 4"):
@@ -787,13 +777,13 @@ def test_local_tables_keyed_by_name_not_position(spark, corpus_df):
         m.unpersist()
 
 
-def test_flat_kernel_identical_to_tuple_kernel(spark, tri, corpus_df):
-    """Round-10 flat kernel (int-interned vocab + per-batch gram memo,
-    flatten_local_tables): value-identical to the round-9 tuple kernel
-    and to the relational scorer — including the OOV-collapse argument
-    (distinct OOV tokens in the same positions score identically, OOV
-    in context vs final position, repeated grams that exercise the
-    memo) and duplicate/NULL ids."""
+def test_score_broadcast_oov_collapse_and_memo(spark, tri, corpus_df):
+    """The interned payload collapses every out-of-vocabulary token to
+    one id and memoizes the cascade per distinct gram: value-identical
+    to the relational scorer anyway — distinct OOV tokens in the same
+    positions score identically, OOV in context vs final position,
+    repeated grams that hit the memo, duplicate/NULL ids — at order 3
+    and at order 5 with pruning (the deployed shape)."""
     docs = spark.createDataFrame(
         [
             (1, "the cat sat on the mat"),
@@ -808,52 +798,16 @@ def test_flat_kernel_identical_to_tuple_kernel(spark, tri, corpus_df):
         ],
         "doc_id long, text string",
     )
-    want = _score_map(tri.score(docs))
-    flat = _score_map(tri.score_broadcast(docs, kernel="flat"))
-    tup = _score_map(tri.score_broadcast(docs, kernel="tuple"))
-    _assert_scores_equal(flat, want)
-    _assert_scores_equal(tup, want)
+    got = _score_map(tri.score_broadcast(docs))
+    _assert_scores_equal(got, _score_map(tri.score(docs)))
     # the OOV-token identity must not leak into the score
-    assert flat[2] == flat[3]
-    # both kernels at order 5 with pruning (the deployed shape)
+    assert got[2] == got[3]
     corpus5 = [t + " so it goes on and on again" for t in CORPUS] * 2
     df5 = spark.createDataFrame([(t,) for t in corpus5], "text string")
     m = NgramKN.fit(df5, order=5, min_count=2)
     try:
-        w5 = _score_map(m.score(docs))
         _assert_scores_equal(
-            _score_map(m.score_broadcast(docs, kernel="flat")), w5
-        )
-        _assert_scores_equal(
-            _score_map(m.score_broadcast(docs, kernel="tuple")), w5
+            _score_map(m.score_broadcast(docs)), _score_map(m.score(docs))
         )
     finally:
         m.unpersist()
-    with pytest.raises(ValueError, match="kernel must be"):
-        tri.score_broadcast(docs, kernel="nope")
-
-
-def test_score_broadcast_payload_layout_wins(spark, tri):
-    """A provided _local payload's LAYOUT picks the kernel regardless
-    of the kernel= argument — re-keying an existing broadcast per call
-    would defeat the collect-once contract."""
-    docs = spark.createDataFrame(
-        [(1, "the cat sat on the mat"), (2, "zzz qqq")],
-        "doc_id long, text string",
-    )
-    want = _score_map(tri.score(docs))
-    flat_payload = tri.local_tables_flat()
-    tup_payload = tri.local_tables()
-    # cross the payloads against the opposite kernel= value
-    _assert_scores_equal(
-        _score_map(tri.score_broadcast(docs, kernel="tuple", _local=flat_payload)),
-        want,
-    )
-    _assert_scores_equal(
-        _score_map(tri.score_broadcast(docs, kernel="flat", _local=tup_payload)),
-        want,
-    )
-    # and through a pre-broadcast flat payload (the streaming shape)
-    bc = spark.sparkContext.broadcast(flat_payload)
-    _assert_scores_equal(_score_map(tri.score_broadcast(docs, _local=bc)), want)
-    bc.unpersist()

@@ -13,7 +13,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from consume_kafka_avro_data_spark.operators.lm import BigramKN
+from consume_kafka_avro_data_spark.operators.lm import NgramKN
 from consume_kafka_avro_data_spark.operators.packing import pack_sequences
 from consume_kafka_avro_data_spark.operators.quality import (
     quality_probability,
@@ -55,7 +55,7 @@ def test_end_to_end_pipeline(spark, corpus):
         n_features=1 << 12,
         max_iter=25,
     )
-    lm = BigramKN.fit(mk([(i, doc(CLEAN_WORDS)) for i in range(200)]))
+    lm = NgramKN.fit(mk([(i, doc(CLEAN_WORDS)) for i in range(200)]), order=2)
 
     # stage 1: learned quality gate
     scored = quality_probability(clf, corpus)

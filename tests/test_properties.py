@@ -635,23 +635,24 @@ def test_kn_per_context_mass_is_one(spark, texts):
     distribution and every seen context's total probability mass over
     the w2 vocabulary is exactly 1 — discount taken equals discount
     redistributed (the KN invariant, as a law rather than an example)."""
-    from consume_kafka_avro_data_spark.operators.lm import BigramKN
+    from consume_kafka_avro_data_spark.operators.lm import NgramKN
 
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    m = BigramKN.fit(df)
     try:
-        cont = {r.w2: r.pcont for r in m.cont.collect()}
-        if not cont:  # corpus of <2-token docs: no bigrams, no model
-            assert m.probs.count() == 0
-            return
+        m = NgramKN.fit(df, order=2)
+    except ValueError as e:  # corpus of <2-token docs: no bigrams, no model
+        assert "no length-2 token windows" in str(e)
+        return
+    try:
+        cont = {r.w1: r.p1 for r in m.p1.collect()}
         assert sum(cont.values()) == pytest.approx(1.0)
-        lam = {r.w1: r.lam for r in m.contexts.collect()}
+        lam = {r.w1: r.lam for r in m.lams[2].collect()}
         seen = {
-            (r.w1, r.w2) for r in m.probs.select("w1", "w2").collect()
+            (r.w1, r.w2) for r in m.probs[2].select("w1", "w2").collect()
         }
         from pyspark.sql import functions as F
 
-        obs = m.probs.groupBy("w1").agg(F.sum("p").alias("s")).collect()
+        obs = m.probs[2].groupBy("w1").agg(F.sum("p").alias("s")).collect()
         for r in obs:
             unseen = sum(
                 pc for w2, pc in cont.items() if (r.w1, w2) not in seen

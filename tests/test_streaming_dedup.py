@@ -781,49 +781,31 @@ def test_lm_gate_validated_eagerly(spark, tmp_path):
         lm.unpersist()
 
 
-def test_lm_gate_accepts_bigram_model(spark, tmp_path):
-    """BigramKN is an advertised lm_model too — its evidence column is
-    n_bigrams, which the gate must normalize into the audit trail's
-    n_ngrams schema instead of crashing on the first micro-batch."""
-    from consume_kafka_avro_data_spark.operators.lm import BigramKN
+def _past_ceiling(lm):
+    """``lm``'s tables behind a model that reports more rows than
+    MAX_LOCAL_MODEL_ROWS — the relational side of the LM gate's size
+    choice, without fitting a model that large."""
+    from consume_kafka_avro_data_spark.operators.lm import (
+        MAX_LOCAL_MODEL_ROWS,
+        NgramKN,
+    )
 
-    lm = BigramKN.fit(
-        spark.createDataFrame(
-            [(i, BASE) for i in range(10)], "doc_id long, text string"
-        )
-    )
-    salad = " ".join(reversed(BASE.split()))
-    probe = spark.createDataFrame(
-        [(1, BASE), (2, salad)], "doc_id long, text string"
-    )
-    nll = {r.doc_id: r.avg_nll for r in lm.score(probe).collect()}
-    cut = (nll[1] + nll[2]) / 2
-    ingest = StreamingDedupIngest(
-        spark,
-        store_dir=str(tmp_path / "store"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        lm_model=lm,
-        lm_threshold=cut,
-        lm_rejects_dir=str(tmp_path / "lm_rejects"),
-    )
-    stream = _doc_stream(spark, tmp_path, [[(1, BASE), (2, salad)]])
-    m = ingest.run_to_completion(stream)
-    assert m.docs == 2 and m.rejected_docs == 1
-    rej = spark.read.parquet(str(tmp_path / "lm_rejects")).collect()
-    assert [r.doc_id for r in rej] == [2]
-    assert rej[0].n_ngrams >= 1  # normalized column name
-    lm.unpersist()
+    class _Huge(NgramKN):
+        def model_rows(self):
+            return MAX_LOCAL_MODEL_ROWS + 1
+
+    return _Huge(lm.order, lm.probs, lm.lams, lm.p1, lm.discount)
 
 
 def test_lm_gate_broadcast_auto_and_plan(spark, tmp_path):
-    """Round-8: the LM gate scores with the model tables BROADCAST by
-    default (NgramKN auto-detects the hint), so each micro-batch's
-    score plan is map-only up to the per-doc aggregate — without it,
-    every batch pays up to 2n−1 sort-merge shuffles against the model
-    tables.  Pinned on the deployed form (save/load-ed model: parquet
-    tables); BigramKN auto-resolves OFF (its score has no hint) and
-    forcing the flag on it is an eager config error."""
-    from consume_kafka_avro_data_spark.operators.lm import BigramKN, NgramKN
+    """The LM gate picks its scorer once, at construction, from the
+    model's size.  A model within MAX_LOCAL_MODEL_ROWS is broadcast as
+    a dict and each micro-batch's score plan has NO model join (one
+    Arrow pass); a model reporting more rows than the ceiling stays on
+    the relational scorer's 2n−1 joins.  Both produce equal scores.
+    Pinned on the deployed form (a save/load-ed model: parquet
+    tables)."""
+    from consume_kafka_avro_data_spark.operators.lm import NgramKN
 
     trusted = spark.createDataFrame(
         [(i, BASE) for i in range(10)], "doc_id long, text string"
@@ -832,79 +814,52 @@ def test_lm_gate_broadcast_auto_and_plan(spark, tmp_path):
     lm.save(str(tmp_path / "m"))
     lm.unpersist()
     loaded = NgramKN.load(spark, str(tmp_path / "m"))
-
-    ingest = StreamingDedupIngest(
-        spark,
-        store_dir=str(tmp_path / "store"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        lm_model=loaded,
-        lm_threshold=5.0,
-    )
-    assert ingest.lm_broadcast is True  # auto: NgramKN supports the hint
-
     batch = spark.createDataFrame(
-        [(1, BASE), (2, " ".join(reversed(BASE.split())))],
+        [(1, BASE), (2, " ".join(reversed(BASE.split()))), (3, "hi")],
         "doc_id long, text string",
     )
-    scored = ingest._lm_scored(batch)
-    plan = scored._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        scored._jdf.queryExecution(), "simple"
-    )
-    # all 2n−1 = 3 model joins broadcast; the only sort-merge allowed
-    # is the final doc-sized id-restore join
-    assert plan.count("BroadcastHashJoin") >= 3, plan
-    assert plan.count("SortMergeJoin") <= 1, plan
-    # and the hinted scores are the plain path's scores, exactly
-    off = StreamingDedupIngest(
-        spark,
-        store_dir=str(tmp_path / "store2"),
-        checkpoint_dir=str(tmp_path / "ckpt2"),
-        lm_model=loaded,
-        lm_threshold=5.0,
-        lm_broadcast=False,
-    )
-    assert off.lm_broadcast is False
-    want = {
-        r.doc_id: (r.n_ngrams, r.avg_nll)
-        for r in off._lm_scored(batch).collect()
-    }
-    got = {r.doc_id: (r.n_ngrams, r.avg_nll) for r in scored.collect()}
-    assert got == want
 
-    bg = BigramKN.fit(trusted)
-    try:
-        auto = StreamingDedupIngest(
+    def gate(model, tag):
+        ingest = StreamingDedupIngest(
             spark,
-            store_dir=str(tmp_path / "store3"),
-            checkpoint_dir=str(tmp_path / "ckpt3"),
-            lm_model=bg,
+            store_dir=str(tmp_path / f"store_{tag}"),
+            checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
+            lm_model=model,
             lm_threshold=5.0,
         )
-        assert auto.lm_broadcast is False  # BigramKN: no hint to turn on
-        with pytest.raises(ValueError, match="broadcast_model"):
-            StreamingDedupIngest(
-                spark,
-                store_dir=str(tmp_path / "store4"),
-                checkpoint_dir=str(tmp_path / "ckpt4"),
-                lm_model=bg,
-                lm_threshold=5.0,
-                lm_broadcast=True,
-            )
-    finally:
-        bg.unpersist()
+        scored = ingest._lm_scored(batch)
+        plan = scored._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            scored._jdf.queryExecution(), "simple"
+        )
+        got = {r.doc_id: (r.n_ngrams, r.avg_nll) for r in scored.collect()}
+        return ingest, plan, got
+
+    small, plan_small, got_small = gate(loaded, "small")
+    assert small._lm_local is not None  # collected at construction
+    assert "Join" not in plan_small, plan_small
+    assert "ArrowEvalPython" in plan_small, plan_small
+
+    big, plan_big, got_big = gate(_past_ceiling(loaded), "big")
+    assert big._lm_local is None
+    assert plan_big.count("Join") >= 3, plan_big  # 2n−1 model joins
+    assert "ArrowEvalPython" not in plan_big, plan_big
+
+    assert set(got_small) == set(got_big) == {1, 2, 3}
+    for i, (n, nll) in got_big.items():
+        assert got_small[i][0] == n, i
+        if nll is None:
+            assert got_small[i][1] is None, i
+        else:
+            assert got_small[i][1] == pytest.approx(nll, rel=1e-12), i
 
 
 def test_lm_gate_dict_tier_and_size_gated_auto(spark, tmp_path):
-    """Round-9: (a) lm_broadcast="dict" collects the model ONCE at
-    construction and scores each micro-batch through the broadcast-
-    dict Arrow kernel — the per-batch plan has ZERO joins, and the
-    gate's routing (rejects, metrics, audit trail) is identical to the
-    relational arms; (b) AUTO now size-gates: a model reporting
-    table rows past the local-dict ceiling resolves lm_broadcast to
-    False (sort-merge degrade) instead of forcing broadcast (r08
-    advisor); (c) "dict" with a hint-less model is an eager config
-    error."""
-    from consume_kafka_avro_data_spark.operators.lm import BigramKN, NgramKN
+    """End to end on both sides of the size choice: the broadcast-dict
+    gate (a model within the ceiling) and the relational gate (the
+    same tables behind a model reporting more rows than the ceiling)
+    route the same stream identically — same rejects, same metrics,
+    same audit trail."""
+    from consume_kafka_avro_data_spark.operators.lm import NgramKN
 
     trusted = spark.createDataFrame(
         [(i, BASE) for i in range(10)], "doc_id long, text string"
@@ -917,62 +872,28 @@ def test_lm_gate_dict_tier_and_size_gated_auto(spark, tmp_path):
         )
         nll = {r.doc_id: r.avg_nll for r in lm.score(probe).collect()}
         cut = (nll[1] + nll[2]) / 2
-        ingest = StreamingDedupIngest(
-            spark,
-            store_dir=str(tmp_path / "store"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            lm_model=lm,
-            lm_threshold=cut,
-            lm_broadcast="dict",
-            lm_rejects_dir=str(tmp_path / "lm_rejects"),
-        )
-        assert ingest.lm_broadcast == "dict"
-        assert ingest._lm_local is not None  # collected at construction
-        batch = spark.createDataFrame(
-            [(1, BASE), (2, salad)], "doc_id long, text string"
-        )
-        scored = ingest._lm_scored(batch)
-        plan = scored._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            scored._jdf.queryExecution(), "simple"
-        )
-        assert "Join" not in plan, plan
-        assert "ArrowEvalPython" in plan, plan
-        # end-to-end: same routing as the relational gate
-        stream = _doc_stream(spark, tmp_path, [[(1, BASE), (2, salad)]])
-        m = ingest.run_to_completion(stream)
-        assert m.docs == 2 and m.rejected_docs == 1
-        rej = spark.read.parquet(str(tmp_path / "lm_rejects")).collect()
-        assert [r.doc_id for r in rej] == [2]
-
-        # (b) size-gated auto: past-ceiling model rows resolve to False
-        class _Huge(NgramKN):
-            def model_rows(self):
-                return 10_000_000
-
-        huge = _Huge(lm.order, lm.probs, lm.lams, lm.p1, lm.discount)
-        auto = StreamingDedupIngest(
-            spark,
-            store_dir=str(tmp_path / "store2"),
-            checkpoint_dir=str(tmp_path / "ckpt2"),
-            lm_model=huge,
-            lm_threshold=cut,
-        )
-        assert auto.lm_broadcast is False
-
-        # (c) "dict" demands score_broadcast support
-        bg = BigramKN.fit(trusted)
-        try:
-            with pytest.raises(ValueError, match="score_broadcast"):
-                StreamingDedupIngest(
-                    spark,
-                    store_dir=str(tmp_path / "store3"),
-                    checkpoint_dir=str(tmp_path / "ckpt3"),
-                    lm_model=bg,
-                    lm_threshold=cut,
-                    lm_broadcast="dict",
-                )
-        finally:
-            bg.unpersist()
+        for tag, model, dict_tier in (
+            ("dict", lm, True),
+            ("rel", _past_ceiling(lm), False),
+        ):
+            ingest = StreamingDedupIngest(
+                spark,
+                store_dir=str(tmp_path / f"store_{tag}"),
+                checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
+                lm_model=model,
+                lm_threshold=cut,
+                lm_rejects_dir=str(tmp_path / f"rej_{tag}"),
+            )
+            assert (ingest._lm_local is not None) is dict_tier, tag
+            stream = _doc_stream(
+                spark, tmp_path / tag, [[(1, BASE), (2, salad), (3, "hi")]]
+            )
+            m = ingest.run_to_completion(stream)
+            assert m.docs == 3 and m.rejected_docs == 1, tag
+            rej = spark.read.parquet(str(tmp_path / f"rej_{tag}")).collect()
+            assert [(r.doc_id, r.n_ngrams) for r in rej] == [
+                (2, len(BASE.split()) - 1)
+            ], tag
     finally:
         lm.unpersist()
 
@@ -1424,59 +1345,6 @@ def test_gopher_repetition_gate_at_ingest(spark, tmp_path):
         )
 
 
-def test_lm_gate_dict_payload_layouts(spark, tmp_path):
-    """Round-10: lm_broadcast="dict" ships the FLAT payload
-    (local_tables_flat — int-interned keys, per-batch gram memo) while
-    "dict-tuple" keeps the round-9 string-tuple layout for the bench
-    A/B; both collect once at construction, both plans stay join-free,
-    and both route micro-batches identically to the relational gate."""
-    from consume_kafka_avro_data_spark.operators.lm import NgramKN
-
-    trusted = spark.createDataFrame(
-        [(i, BASE) for i in range(10)], "doc_id long, text string"
-    )
-    lm = NgramKN.fit(trusted, order=2)
-    try:
-        salad = " ".join(reversed(BASE.split()))
-        probe = spark.createDataFrame(
-            [(1, BASE), (2, salad)], "doc_id long, text string"
-        )
-        nll = {r.doc_id: r.avg_nll for r in lm.score(probe).collect()}
-        cut = (nll[1] + nll[2]) / 2
-        for i, (mode, flat_expected) in enumerate(
-            [("dict", True), ("dict-tuple", False)]
-        ):
-            ingest = StreamingDedupIngest(
-                spark,
-                store_dir=str(tmp_path / f"store{i}"),
-                checkpoint_dir=str(tmp_path / f"ckpt{i}"),
-                lm_model=lm,
-                lm_threshold=cut,
-                lm_broadcast=mode,
-                lm_rejects_dir=str(tmp_path / f"rej{i}"),
-            )
-            assert ingest.lm_broadcast == "dict"
-            payload = ingest._lm_local.value
-            assert ("vocab" in payload) is flat_expected, mode
-            batch = spark.createDataFrame(
-                [(1, BASE), (2, salad)], "doc_id long, text string"
-            )
-            scored = ingest._lm_scored(batch)
-            plan = scored._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-                scored._jdf.queryExecution(), "simple"
-            )
-            assert "Join" not in plan, (mode, plan)
-            stream = _doc_stream(
-                spark, tmp_path / f"s{i}", [[(1, BASE), (2, salad)]]
-            )
-            m = ingest.run_to_completion(stream)
-            assert m.docs == 2 and m.rejected_docs == 1, mode
-            rej = spark.read.parquet(str(tmp_path / f"rej{i}")).collect()
-            assert [r.doc_id for r in rej] == [2], mode
-    finally:
-        lm.unpersist()
-
-
 def test_c4_and_heuristic_quality_counts_both_rejects(spark, tmp_path):
     """Round-10 sweep fix: with the C4 gate AND the heuristic quality
     gate both on, rejected_docs must count BOTH gates' rejects — the
@@ -1526,49 +1394,3 @@ def test_c4_and_heuristic_quality_counts_both_rejects(spark, tmp_path):
             spark.read.parquet(str(tmp_path / "c4_rejects")).collect()] == [3]
     assert [r.doc_id for r in
             spark.read.parquet(str(tmp_path / "rejects")).collect()] == [2]
-
-
-def test_store_bloom_prefilter_routing_identical(spark, tmp_path):
-    """Round-11 scale knob: store_bloom=True prefilters the store's
-    banded rows with a bloom over the batch's band keys (pure-JVM bit
-    test in the scan stage — the q_decontaminate_bloom shape applied
-    to the signature store, removing both full-store shuffles from the
-    per-batch probe).  Exactness pinned: same stream, same store dir
-    layout, IDENTICAL routing (dupes map, stored canonicals, metrics,
-    census counts) as the unfiltered run — a bloom has no false
-    negatives, a bucket's rows share one verdict (hot-counts stay
-    exact), and FP buckets can't equi-join any probe key."""
-    runs = {}
-    for name, flag in (("plain", False), ("bloom", True)):
-        ing = StreamingDedupIngest(
-            spark,
-            store_dir=str(tmp_path / f"store_{name}"),
-            checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
-            dupes_dir=str(tmp_path / f"dupes_{name}"),
-            store_bloom=flag,
-        )
-        m = ing.run_to_completion(
-            _doc_stream(spark, tmp_path / name, [BATCH1, BATCH2])
-        )
-        stored = sorted(r["_id"] for r in ing.store.read().collect())
-        dupes = {
-            r.dup_id: r.match_id
-            for r in spark.read.parquet(
-                str(tmp_path / f"dupes_{name}")
-            ).collect()
-        }
-        census = ing.gate_census()
-        runs[name] = {
-            "docs": m.docs,
-            "dup": m.dup_docs,
-            "novel": m.novel_docs,
-            "stored": stored,
-            "dupes": dupes,
-            "census_counts": {
-                g: (v["docs_in"], v["docs_rejected"])
-                for g, v in census.items()
-            },
-        }
-    assert runs["plain"] == runs["bloom"]
-    assert runs["bloom"]["dupes"] == {2: 1, 4: 1}
-    assert runs["bloom"]["stored"] == [1, 3, 5]
